@@ -166,6 +166,11 @@ object Bench {
         // r14: the Louvain levels ride the same pair relation
         "q347_louvain_level", "q353_louvain_two_level"),
       "stage_pc1" -> Set("q272_pca_power", "q309_embedding_drift"),
+      // the resident IVF-PQ serving index (loaded and reconstructed once
+      // per index version): without the stage, whichever of its two
+      // consumers ran first would pay the load, and pass 2 would time
+      // memo hits for both
+      "stage_ivfpq_index" -> Set("q289_ann_serve", "q316_ann_recall"),
       // r13: the k-means centroids + assignment four queries share
       // (r15: + the cross-modal contamination readout)
       "stage_kmeans_cells" -> Set("q37_dedup_embedding",
@@ -187,6 +192,8 @@ object Bench {
         graft.operators.Graph.materializeSupport2(spark, sfDir)
       case "stage_pc1" =>
         graft.operators.Similarity.materializePc1(spark, sfDir)
+      case "stage_ivfpq_index" =>
+        graft.operators.Similarity.materializeIvfpqIndex(spark, sfDir)
       case "stage_kmeans_cells" =>
         graft.operators.Dedup.materializeCells(spark, sfDir)
       case "stage_bpe_merges" =>
@@ -220,6 +227,7 @@ object Bench {
       // precedes louvain_l1 (an existing dependency).
       val stageOrder = Seq("stage_hashed_shingles", "stage_minhash_sigs",
         "stage_support2_pairs", "stage_cc_labels", "stage_pc1",
+        "stage_ivfpq_index",
         "stage_kmeans_cells", "stage_bpe_merges", "stage_louvain_l1")
       val stages = stageOrder.collect {
         case sname if stageOf(sname).exists(sel.contains) =>

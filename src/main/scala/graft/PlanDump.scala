@@ -226,8 +226,9 @@ object PlanDump {
           "mergeable min_by removal election, left join emits the " +
           "per-doc keep/remove verdict"),
       "q289_ann_serve" ->
-        ("IVF-PQ served from the PERSISTED index: centroids/codebook/" +
-          "codes come from parquet scans (no training subtree in the " +
+        ("IVF-PQ served from the RESIDENT copy of the persisted " +
+          "index: centroids and the cell-partitioned reconstruction are " +
+          "lineage cuts (no training or reconstruction subtree in the " +
           "plan), broadcast quantizer, cell-confined ADC equi-join, " +
           "exact rerank on Q*10 raw vectors"),
       "q290_ann_append" ->
@@ -288,7 +289,7 @@ object PlanDump {
           "hash as the only corpus-wide shuffle key, train x eval " +
           "candidate equi-join, text verify joins on candidates only"),
       "q316_ann_recall" ->
-        ("ANN recall audit: persisted-index probe (broadcast " +
+        ("ANN recall audit: resident-index probe (broadcast " +
           "centroids, cell-confined ADC) vs one linear Qx N exact " +
           "pass; scalar-broadcast readout join"),
       "q317_substring_dedup" ->

@@ -413,18 +413,27 @@ object Similarity {
 
   /** Fingerprint of the source the index derives from (embeddings
     * parquet: per-file path, size, mtime — md5'd). */
-  private[graft] def ivfpqFingerprint(dir: String): String = {
-    import java.nio.file.{Files, Paths}
+  private[graft] def ivfpqFingerprint(dir: String): String =
+    fileStamp(java.nio.file.Paths.get(dir).toAbsolutePath.normalize
+      .resolve("embeddings.parquet"))
+
+  /** md5 over the sorted per-file `path:size:mtime` lines under `root`
+    * (empty if absent) — the one stamp walk behind both the source
+    * fingerprint and the resident index's version key. */
+  private def fileStamp(root: java.nio.file.Path): String = {
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val p = Paths.get(dir).toAbsolutePath.normalize
-      .resolve("embeddings.parquet")
     val lines =
-      if (!Files.exists(p)) Seq.empty[String]
-      else Files.walk(p).iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .map(f => s"$f:${Files.size(f)}:" +
-          s"${Files.getLastModifiedTime(f).toMillis}")
-        .toSeq.sorted
+      if (!Files.exists(root)) Seq.empty[String]
+      else {
+        val files = Files.walk(root)
+        try files.iterator().asScala
+          .filter(Files.isRegularFile(_))
+          .map(f => s"$f:${Files.size(f)}:" +
+            s"${Files.getLastModifiedTime(f).toMillis}")
+          .toSeq.sorted
+        finally files.close()
+      }
     java.security.MessageDigest.getInstance("MD5")
       .digest(lines.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -475,13 +484,91 @@ object Similarity {
   }
 
   /** Serve strictly FROM a persisted index — no training fallback; a
-    * missing index is the caller's bug and fails loudly. */
+    * missing index is the caller's bug and fails loudly. A request runs
+    * only probe → ADC → rerank against the resident copy of the index
+    * (see [[residentIvfpq]]). */
   def annIvfPqServeFrom(spark: SparkSession, dir: String,
       indexDir: String): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val codebook = spark.read.parquet(s"$indexDir/codebook")
-    val codes = spark.read.parquet(s"$indexDir/codes")
-    ivfpqServe(spark, dir, centroids, ivfpqRecon(codes, codebook))
+    val r = residentIvfpq(spark, indexDir)
+    ivfpqServe(spark, dir, r.centroids, r.recon)
+  }
+
+  /** A persisted index held in memory for serving: the centroids as a
+    * lineage cut and the reconstructed (cand_id, cell, rvec, rn2)
+    * relation cut with a claimed hash layout on `cell`, so the ADC
+    * join's index side is never re-exchanged. Holds N·d doubles of
+    * reconstruction. `version` is the index directory's file stamp. */
+  private final case class ResidentIvfpq(version: String,
+      centroids: DataFrame, recon: DataFrame) {
+    def cuts: Seq[org.apache.spark.rdd.RDD[_]] =
+      Seq(centroids, recon).flatMap(_.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      })
+    def release(): Unit = cuts.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Resident indexes, one per (session, index dir): an entry serves
+    * while the directory's stamp equals its version, and a re-persist —
+    * by [[ensureIvfpqIndex]] in this JVM or by any other process —
+    * changes the stamp (new part-file names, sizes, mtimes), so the
+    * next request rebuilds and releases the superseded blocks. A
+    * request still running on the superseded copy when that happens
+    * may fail, as it would have with the files rewritten under it. */
+  private val residentCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), ResidentIvfpq]()
+  private val residentLoads = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Number of resident-index builds in this JVM (spec probe). */
+  private[graft] def residentIvfpqLoads: Long = residentLoads.get()
+
+  /** RDD ids of the cached cuts of the resident copy of `indexDir`
+    * (spec probe; empty if none is resident). */
+  private[graft] def residentIvfpqRddIds(spark: SparkSession,
+      indexDir: String): Seq[Int] =
+    Option(residentCache.get(residentKey(spark, indexDir)))
+      .toSeq.flatMap(_.cuts.map(_.id))
+
+  private def residentKey(spark: SparkSession,
+      indexDir: String): (String, String) =
+    (org.apache.spark.sql.GraftBridge.sessionUUID(spark),
+      java.nio.file.Paths.get(indexDir).toAbsolutePath.normalize.toString)
+
+  /** The resident copy of the index persisted at `indexDir`, loaded
+    * and reconstructed once per index version. The stamp is read under
+    * the entry's lock, so concurrent first requests build once and a
+    * superseded copy is evicted exactly once. */
+  private def residentIvfpq(spark: SparkSession,
+      indexDir: String): ResidentIvfpq = {
+    val key = residentKey(spark, indexDir)
+    residentCache.compute(key, { (_, old) =>
+      val version = fileStamp(java.nio.file.Paths.get(key._2))
+      if (old != null && old.version == version) old
+      else {
+        if (old != null) old.release()
+        residentLoads.incrementAndGet()
+        val centroids = spark.read.parquet(s"$indexDir/centroids")
+          .cutLineage()
+        val recon = ivfpqRecon(spark.read.parquet(s"$indexDir/codes"),
+            spark.read.parquet(s"$indexDir/codebook"))
+          .cutPartitionedBy(graft.Ckpt.scaleParts(spark, indexDir), "cell")
+        ResidentIvfpq(version, centroids, recon)
+      }
+    })
+  }
+
+  /** Drop every resident index and release its cached blocks. */
+  private def clearResidentIvfpq(): Unit =
+    residentCache.keySet().forEach { k =>
+      Option(residentCache.remove(k)).foreach(_.release())
+    }
+
+  /** Bench hook: make the resident index of `dir`'s canonical index
+    * location ready OUTSIDE any query's timing (see [[materializePc1]]). */
+  private[graft] def materializeIvfpqIndex(spark: SparkSession,
+      dir: String): Unit = {
+    val idx = ivfpqIndexDir(spark, dir)
+    ensureIvfpqIndex(spark, dir, idx)
+    residentIvfpq(spark, idx)
   }
 
   /** q290: INCREMENTAL index append — the production FAISS `add()` path
@@ -685,7 +772,12 @@ object Similarity {
   private val pc1Cache = new java.util.concurrent.ConcurrentHashMap[
     (String, String), (DataFrame, DataFrame, DataFrame)]()
 
-  private[graft] def clearPc1Cache(): Unit = pc1Cache.clear()
+  /** Clears the PC1 memo and the resident IVF-PQ indexes (the one
+    * between-pass reset Bench and the benchmark call). */
+  private[graft] def clearPc1Cache(): Unit = {
+    pc1Cache.clear()
+    clearResidentIvfpq()
+  }
 
   /** Bench hook: materialize the shared PC1 stage OUTSIDE any query's
     * timing (see [[graft.operators.Dedup.materializeLabels]]). */
@@ -1051,10 +1143,8 @@ object Similarity {
   private[graft] def annTop5(spark: SparkSession, dir: String): DataFrame = {
     val idx = ivfpqIndexDir(spark, dir)
     ensureIvfpqIndex(spark, dir, idx)
-    val centroids = spark.read.parquet(s"$idx/centroids")
-    val codebook = spark.read.parquet(s"$idx/codebook")
-    val codes = spark.read.parquet(s"$idx/codes")
-    ivfpqServe(spark, dir, centroids, ivfpqRecon(codes, codebook), k = 5)
+    val r = residentIvfpq(spark, idx)
+    ivfpqServe(spark, dir, r.centroids, r.recon, k = 5)
       .select(col("q_id"), col("cand_id"))
   }
 

@@ -25,31 +25,32 @@ object Tables {
     * per query, so a full bench pass paid ~700 such jobs of pure
     * planning latency. The memo caches the INFERRED SCHEMA (metadata
     * only — never data or results; every query still scans the parquet
-    * from disk) keyed by (path, directory mtime), so a regenerated
-    * testdata dir re-infers. Passing an explicit schema also skips the
+    * from disk) keyed by (path, max mtime, entry count), so a
+    * regenerated testdata dir re-infers. Passing an explicit schema also skips the
     * fallback inference pass entirely at 100 TB, where footer sampling
     * of a large table is driver-side listing work (guide §7.3). */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), org.apache.spark.sql.types.StructType]()
+    (String, Long, Int), org.apache.spark.sql.types.StructType]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     // GRAFT_SCHEMA_MEMO=0: A/B kill-switch (measurement honesty only)
     // Cache stamp (r17, ADVICE fix): max mtime over the path AND its
-    // direct children plus the child count — an in-place part-file
+    // direct children, and the child count — an in-place part-file
     // rewrite (same name) bumps the file's own mtime but not the
-    // directory's, and an added/removed part changes the count. A stamp
-    // of 0 means lastModified() could not see the path (non-local FS,
-    // absent) — fall back to plain inference rather than caching blind.
+    // directory's, and an added/removed part changes the count. The two
+    // stay separate key fields: summed, (T, n+1 parts) and (T+1, n
+    // parts) would collide. An mtime of 0 means lastModified() could
+    // not see the path (non-local FS, absent) — fall back to plain
+    // inference rather than caching blind.
     val f = new java.io.File(path)
     val kids = Option(f.listFiles()).getOrElse(Array.empty)
-    val stamp = (f.lastModified() +: kids.map(_.lastModified())).max +
-      kids.length
+    val mtime = (f.lastModified() +: kids.map(_.lastModified())).max
     val df = if (sys.env.get("GRAFT_SCHEMA_MEMO").contains("0") ||
-        stamp == 0L)
+        mtime == 0L)
       spark.read.parquet(path)
     else {
-      val sch = schemaCache.computeIfAbsent((path, stamp),
+      val sch = schemaCache.computeIfAbsent((path, mtime, kids.length),
         _ => spark.read.parquet(path).schema)
       spark.read.schema(sch).parquet(path)
     }

@@ -48,6 +48,36 @@ class SourcesSpec extends SparkSpec {
       s"forms disagree on the instant: $outs")
   }
 
+  test("Tables.load schema memo: (mtime T, n+1 entries) and (T+1, n " +
+      "entries) are different stamps") {
+    import java.io.File
+    val dir = Files.createTempDirectory("graft_schemamemo").toString
+    val path = s"$dir/t.parquet"
+    def stamp(mtime: Long): Int = {
+      val d = new File(path)
+      val kids = d.listFiles()
+      (d +: kids).foreach(_.setLastModified(mtime))
+      kids.length
+    }
+    val t0 = 1600000000000L
+    spark.range(3).select(col("id").as("a")).coalesce(1)
+      .write.parquet(path)
+    val n = stamp(t0)
+    assert(Tables.load(spark, dir, "t").columns.toSeq === Seq("a"))
+    // regenerate in place with a new schema and one entry fewer, one
+    // millisecond later: the sum mtime + count is unchanged
+    org.apache.commons.io.FileUtils.deleteDirectory(new File(path))
+    spark.range(3).select(col("id").cast("string").as("b")).coalesce(1)
+      .write.parquet(path)
+    new File(path).listFiles().filter(_.getName.startsWith("."))
+      .head.delete()
+    assert(stamp(t0 + 1) === n - 1)
+    val back = Tables.load(spark, dir, "t")
+    assert(back.columns.toSeq === Seq("b"), "stale memoized schema served")
+    assert(back.collect().map(_.getString(0)).sorted.toSeq ===
+      Seq("0", "1", "2"))
+  }
+
   test("partitioned parquet write prunes partitions on year predicate") {
     val dir = Files.createTempDirectory("graft_part").toString
     val orders = Tables.load(spark, sf, "orders")
