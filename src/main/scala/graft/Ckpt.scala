@@ -89,16 +89,31 @@ object Ckpt {
     /** Materialize `df` and truncate its lineage; returns the cut frame.
       * `eager=false` defers materialization to first use (only wanted
       * when the caller may never evaluate the frame). */
-    def cutLineage(eager: Boolean = true): DataFrame = {
-      val spark = df.sparkSession
-      if (spark.conf.getOption("spark.graft.reliableCheckpoint")
-          .contains("true")) {
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          spark.sparkContext.setCheckpointDir(
-            spark.conf.getOption("spark.graft.checkpointDir").getOrElse(
-              sys.props("java.io.tmpdir") + "/graft_ckpt"))
-        df.checkpoint(eager)
-      } else df.localCheckpoint(eager)
-    }
+    def cutLineage(eager: Boolean = true): DataFrame =
+      if (reliable(df.sparkSession)) df.checkpoint(eager)
+      else df.localCheckpoint(eager)
+  }
+
+  /** [[CutOps.cutLineage]] for an RDD held across jobs (eager): the
+    * same flag picks reliable or local checkpointing, and the RDD stays
+    * persisted, so `unpersist` releases it like a cut frame. Returns
+    * `rdd` itself. */
+  def cutRdd[T](spark: org.apache.spark.sql.SparkSession,
+      rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
+    if (reliable(spark)) { rdd.persist(); rdd.checkpoint() }
+    else rdd.localCheckpoint()
+    rdd.count()
+    rdd
+  }
+
+  /** Whether cuts go to reliable storage; sets the checkpoint dir if so. */
+  private def reliable(spark: org.apache.spark.sql.SparkSession): Boolean = {
+    val on = spark.conf.getOption("spark.graft.reliableCheckpoint")
+      .contains("true")
+    if (on && spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(
+        spark.conf.getOption("spark.graft.checkpointDir").getOrElse(
+          sys.props("java.io.tmpdir") + "/graft_ckpt"))
+    on
   }
 }

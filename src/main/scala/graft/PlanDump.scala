@@ -146,10 +146,10 @@ object PlanDump {
           "(ObjectHashAggregate), range answers are register merges " +
           "over the tiny sketch table"),
       "q245_ann_ivfpq" ->
-        ("IVF x PQ composed ANN serving plan: broadcast centroids + " +
-          "codebooks, top-nprobe cell probe per query, ADC confined to " +
-          "probed cells via the cell equi-join, exact rerank on Q*10 " +
-          "raw vectors — never a flat QxN scan"),
+        ("IVF x PQ composed ANN: training and per-cell blocks built at " +
+          "call time, top-nprobe probe on the driver, one task per probed " +
+          "partition runs ADC + exact rerank of its top-10; the plan is " +
+          "a LocalRelation of the Q*k result rows"),
       "q247_merkle_sync" ->
         ("Merkle sync audit: partial-agg'd BIT_XOR bucket digests both " +
           "sides (64-row exchange), digest compare, row census only in " +
@@ -226,16 +226,16 @@ object PlanDump {
           "mergeable min_by removal election, left join emits the " +
           "per-doc keep/remove verdict"),
       "q289_ann_serve" ->
-        ("IVF-PQ served from the RESIDENT copy of the persisted " +
-          "index: centroids and the cell-partitioned reconstruction are " +
-          "lineage cuts (no training or reconstruction subtree in the " +
-          "plan), broadcast quantizer, cell-confined ADC equi-join, " +
-          "exact rerank on Q*10 raw vectors"),
+        ("IVF-PQ served from the RESIDENT per-cell blocks of the " +
+          "persisted index in two jobs (query fetch, fused probe/ADC/" +
+          "rerank pass); the plan is a LocalRelation of the Q*k result " +
+          "rows, computed at call time"),
       "q290_ann_append" ->
         ("incremental index append: frozen quantizer broadcast to the " +
           "delta's one narrow assignment pass (probe argmax + argmin " +
-          "codes), code union, serving tail unchanged — ingest scales " +
-          "with the delta, never the corpus"),
+          "codes), code union into call-time per-cell blocks, then the " +
+          "q245 serving kernel; the plan is a LocalRelation of the Q*k " +
+          "result rows"),
       "q291_link_prediction" ->
         ("link prediction: wedge self-join on the shared support-2 " +
           "stage, partial-agg'd cn/ra rollup, one anti-join against " +
@@ -289,9 +289,9 @@ object PlanDump {
           "hash as the only corpus-wide shuffle key, train x eval " +
           "candidate equi-join, text verify joins on candidates only"),
       "q316_ann_recall" ->
-        ("ANN recall audit: resident-index probe (broadcast " +
-          "centroids, cell-confined ADC) vs one linear Qx N exact " +
-          "pass; scalar-broadcast readout join"),
+        ("ANN recall audit: the resident-index top-5 (a LocalRelation " +
+          "computed at call time) vs one linear QxN exact pass; " +
+          "scalar-broadcast readout join"),
       "q317_substring_dedup" ->
         ("exact-substring dedup: (hash, window-text) grouped owner " +
           "election — each distinct window shuffles once, map-side " +

@@ -15,8 +15,9 @@ import org.apache.spark.sql.types._
   *
   * Semantics are EXACTLY the built-in composition (and the DuckDB oracle):
   * per element float→double cast, multiply, left-to-right accumulate —
-  * bit-identical results, just codegen'd into a tight primitive loop with
-  * zero allocation.
+  * bit-identical results. The loop is [[DotFold]]'s, a tight primitive
+  * loop with zero allocation; the IVF-PQ serving kernel calls the same
+  * fold.
   */
 case class DotProductFloat(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -34,33 +35,13 @@ case class DotProductFloat(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotFold.floatFloat(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |${ev.value} = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value} +=
-         |    ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.DotFold.floatFloat($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -71,7 +52,7 @@ case class DotProductFloat(left: Expression, right: Expression)
   * scoring in the k-means embedding-dedup path). Identical operation
   * sequence to the `zip_with`+`aggregate` composition and the oracle's
   * list-comprehension sum: float→double cast, multiply, left-to-right
-  * accumulate — bit-identical, codegen'd, zero allocation. */
+  * accumulate ([[DotFold]]) — bit-identical, zero allocation. */
 case class DotFloatDouble(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -86,33 +67,13 @@ case class DotFloatDouble(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += x.getFloat(i).toDouble * y.getDouble(i)
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotFold.floatDouble(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |${ev.value} = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value} +=
-         |    ((double) $a.getFloat($i)) * $b.getDouble($i);
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.DotFold.floatDouble($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

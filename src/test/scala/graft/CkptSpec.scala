@@ -36,4 +36,23 @@ class CkptSpec extends SparkSpec {
     assert(spark.conf.getOption("spark.graft.reliableCheckpoint")
       .forall(_ != "true"), "flag leaked into the shared session")
   }
+
+  test("resident IVF-PQ blocks under reliable checkpointing: same " +
+      "result, blocks checkpointed to storage and released on clear") {
+    val sim = graft.operators.Similarity
+    val indexDir = Files.createTempDirectory("ivfpq_idx").toString
+    sim.ivfpqPersist(spark, sf, indexDir)
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.reliableCheckpoint", "true")
+    s2.conf.set("spark.graft.checkpointDir",
+      Files.createTempDirectory("graft_rckpt").toString)
+    def rows(s: org.apache.spark.sql.SparkSession) =
+      sim.annIvfPqServeFrom(s, sf, indexDir).collect().map(_.toSeq).toSet
+    assert(rows(s2) === rows(spark))
+    val Seq(id) = sim.residentIvfpqRddIds(s2, indexDir)
+    assert(spark.sparkContext.getPersistentRDDs(id).getCheckpointFile
+      .isDefined, "resident blocks were not reliably checkpointed")
+    sim.clearPc1Cache()
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id))
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, when}
 
 /** q289's cross-JVM serving contract: an IVF-PQ index persisted by a
   * DIFFERENT JVM serves bit-identically to an in-memory retrain (q245),
@@ -9,8 +10,10 @@ import org.apache.spark.sql.DataFrame
   * agrees, and a stale fingerprint forces a retrain instead of silently
   * serving the old index (r11 verdict №4). Serving runs from a resident
   * copy of the index: loaded once per index version (also under
-  * concurrent first requests), reloaded after a re-persist, and the
-  * superseded copy's cached blocks released. */
+  * concurrent first requests), reloaded after a re-persist or a source
+  * rewrite, and the superseded copy's cached blocks released once no
+  * request holds it. The fused serving kernel is checked across
+  * partitions (driver merge), on exact ties, and by its job count. */
 class IndexServeSpec extends SparkSpec {
 
   private def key(df: DataFrame): Seq[(Long, Long, Double, Int)] =
@@ -147,5 +150,164 @@ class IndexServeSpec extends SparkSpec {
     assert(sim.residentIvfpqLoads === loads0 + 1,
       s"$n concurrent first requests loaded the index " +
         s"${sim.residentIvfpqLoads - loads0} times")
+  }
+
+  test("a request holding a superseded copy finishes on it; the copy's " +
+      "blocks are released when that request ends") {
+    val sim = operators.Similarity
+    val indexDir = persisted()
+    val old = sim.withIvfpqLease(spark, sf, indexDir) { r =>
+      val id = r.index.blocks.id
+      Files.write(Paths.get(indexDir, "_fingerprint"),
+        "stale".getBytes("UTF-8"))
+      assert(sim.ensureIvfpqIndex(spark, sf, indexDir))
+      // a newer request loads the re-persisted copy and supersedes r
+      assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === retrained)
+      assert(!sim.residentIvfpqRddIds(spark, indexDir).contains(id))
+      assert(cached(id), "superseded copy released while a request held it")
+      // the held request still serves from its own blocks (a lineage
+      // cut: released blocks would fail it, not recompute)
+      assert(key(sim.ivfpqServe(spark, sf, r.index)) === retrained)
+      id
+    }
+    assert(!cached(old),
+      "superseded copy kept its blocks after its last request ended")
+  }
+
+  test("serving across several partitions equals q245: the driver merge " +
+      "of per-partition top-10s is exact") {
+    val sim = operators.Similarity
+    val expected = retrained // q245 at the default width: one partition
+    val key0 = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key0)
+    spark.conf.set(key0, "1k")
+    try {
+      val indexDir = persisted()
+      assert(Ckpt.scaleParts(spark, indexDir) > 1)
+      assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === expected)
+      val ids = sim.residentIvfpqRddIds(spark, indexDir)
+      assert(ids.map(spark.sparkContext.getPersistentRDDs(_)
+        .getNumPartitions) === Seq(Ckpt.scaleParts(spark, indexDir)))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key0, v)
+      case None => spark.conf.unset(key0)
+    }
+  }
+
+  /** A copy of the sf embeddings, written under a fresh dir, whose rows
+    * with vec_id >= n/2 repeat rows 0..n/2-1 (vector and label) under
+    * their own ids: every vector of the lower half has a twin in the
+    * same cell, with an identical ADC score and rounded cosine. */
+  private def twinFixture(): (String, Long) = {
+    val dir = Files.createTempDirectory("ivfpq_twins").toString
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+    val half = e.count() / 2
+    val src = e.select(col("vec_id").as("src"), col("embedding"),
+      col("label"))
+    e.select(col("vec_id"),
+        when(col("vec_id") >= half, col("vec_id") - half)
+          .otherwise(col("vec_id")).as("src"))
+      .join(src, Seq("src"))
+      .select(col("vec_id"), col("embedding"), col("label"))
+      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    (dir, half)
+  }
+
+  test("exact ties (duplicate vectors) break on cand_id in both the ADC " +
+      "cut and the rerank, at any partition count") {
+    val sim = operators.Similarity
+    val (dir, half) = twinFixture()
+    val out = key(sim.annIvfPq(spark, dir))
+    assert(out.size === 20 * 3)
+    out.groupBy(_._1).foreach { case (q, rows) =>
+      val byRn = rows.sortBy(_._4)
+      assert(byRn.map(_._4) === (1 to 3))
+      byRn.sliding(2).foreach { case Seq(a, b) =>
+        assert(a._3 > b._3 || (a._3 == b._3 && a._2 < b._2),
+          s"query $q: $a ranked above $b")
+      }
+      // a served upper twin implies its lower twin (same ADC, same
+      // cosine, lower id) is served above it
+      rows.filter(r => r._2 >= half && r._2 - half != q).foreach { r =>
+        val twin = rows.find(_._2 == r._2 - half)
+        assert(twin.exists(t => t._3 == r._3 && t._4 < r._4),
+          s"query $q: ${r._2} served without its lower twin ranked above")
+      }
+    }
+    val key0 = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key0)
+    spark.conf.set(key0, "1k")
+    try {
+      val indexDir = Files.createTempDirectory("ivfpq_idx").toString
+      sim.ivfpqPersist(spark, dir, indexDir)
+      assert(key(sim.annIvfPqServeFrom(spark, dir, indexDir)) === out)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key0, v)
+      case None => spark.conf.unset(key0)
+    }
+  }
+
+  test("rewriting the source embeddings in place reloads the resident " +
+      "copy; after the retrain, serving equals a fresh retrain") {
+    val sim = operators.Similarity
+    val dir = Files.createTempDirectory("ivfpq_src").toString
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+    e.coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    val indexDir = Files.createTempDirectory("ivfpq_idx").toString
+    sim.ivfpqPersist(spark, dir, indexDir)
+    val before = key(sim.annIvfPqServeFrom(spark, dir, indexDir))
+    assert(before === key(sim.annIvfPq(spark, dir)))
+    // same path, new content: ids rotated by 7, so the queries change
+    val n = e.count()
+    e.withColumn("vec_id", (col("vec_id") + 7) % lit(n))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    def cosR(a: Array[Float], b: Array[Float]): Double = {
+      def dot(x: Array[Float], y: Array[Float]) =
+        x.indices.foldLeft(0.0)((s, i) => s + x(i).toDouble * y(i).toDouble)
+      BigDecimal(dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
+    }
+    // the index files are unchanged, the source is not: reload, and
+    // rerank against the rewritten raw vectors
+    val loads0 = sim.residentIvfpqLoads
+    val mixed = key(sim.annIvfPqServeFrom(spark, dir, indexDir))
+    assert(sim.residentIvfpqLoads === loads0 + 1,
+      "a source rewrite did not reload the resident copy")
+    mixed.foreach { case (q, c, cos, _) =>
+      assert(cos === cosR(vecs(q), vecs(c)))
+    }
+    assert(sim.ensureIvfpqIndex(spark, dir, indexDir))
+    val after = key(sim.annIvfPqServeFrom(spark, dir, indexDir))
+    assert(sim.residentIvfpqLoads === loads0 + 2)
+    assert(after === key(sim.annIvfPq(spark, dir)))
+    assert(after !== before)
+  }
+
+  test("a warm request runs exactly two Spark jobs: query fetch and the " +
+      "fused probe/ADC/rerank pass") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sim = operators.Similarity
+    val sc = spark.sparkContext
+    val indexDir = persisted()
+    assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === retrained)
+    val group = s"ivfpq-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one warm request")
+      try sim.annIvfPqServeFrom(spark, sf, indexDir).collect()
+      finally sc.clearJobGroup()
+      org.apache.spark.GraftSchedulerBridge.waitListenerBus(sc)
+      assert(jobs.get === 2)
+    } finally sc.removeSparkListener(listener)
   }
 }
