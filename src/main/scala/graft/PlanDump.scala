@@ -226,10 +226,10 @@ object PlanDump {
           "mergeable min_by removal election, left join emits the " +
           "per-doc keep/remove verdict"),
       "q289_ann_serve" ->
-        ("IVF-PQ served from the RESIDENT per-cell blocks of the " +
-          "persisted index in two jobs (query fetch, fused probe/ADC/" +
-          "rerank pass); the plan is a LocalRelation of the Q*k result " +
-          "rows, computed at call time"),
+        ("IVF-PQ served from the RESIDENT per-cell blocks and query " +
+          "vectors of the persisted index in one job (the fused probe/" +
+          "ADC/rerank pass); the plan is a LocalRelation of the Q*k " +
+          "result rows, computed at call time"),
       "q290_ann_append" ->
         ("incremental index append: frozen quantizer broadcast to the " +
           "delta's one narrow assignment pass (probe argmax + argmin " +

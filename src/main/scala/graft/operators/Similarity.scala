@@ -1,7 +1,7 @@
 package graft.operators
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
@@ -259,13 +259,13 @@ object Similarity {
     * occupancy). A request then probes Q×cells centroids on the driver
     * (Q bounded, cells ~√N) and runs one task per probed partition:
     * ADC over nprobe/cells of N and the exact rerank of each query's
-    * local ADC top-10 ([[ivfpqServe]]). Nothing is ever Q×N. This
+    * local ADC top-10 ([[ivfpqSearch]]). Nothing is ever Q×N. This
     * transient index is built per call; q289 serves the same kernel
     * from a resident one. */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (centroids, codebook, codes) = ivfpqTrainRelations(spark, dir)
-    ivfpqServe(spark, dir, ivfpqBlocks(spark, dir, centroids, codebook,
-      codes, graft.Ckpt.scaleParts(spark, dir)))
+    ivfpqSearch(spark, ivfpqBlocks(spark, dir, centroids, codebook, codes,
+      graft.Ckpt.scaleParts(spark, dir)), ivfpqQueries(spark, dir))
   }
 
   /** TRAIN half of the IVF-PQ index — everything [[ivfpqPersist]] needs
@@ -386,7 +386,7 @@ object Similarity {
     * groups the reconstructed candidates, joined to their raw vectors,
     * into per-cell blocks. Every norm is computed here, once, by the
     * Spark kernels. The block RDD is lazy and not cached. */
-  private def ivfpqBlocks(spark: SparkSession, dir: String,
+  private[graft] def ivfpqBlocks(spark: SparkSession, dir: String,
       centroids: DataFrame, codebook: DataFrame, codes: DataFrame,
       parts: Int): IvfpqBlocks = {
     val cs = centroids.select(col("cell"), col("c"),
@@ -437,11 +437,20 @@ object Similarity {
     .add("cos", DoubleType)
     .add("rn", IntegerType, nullable = false)
 
-  /** SERVE half: coarse probe → cell-confined ADC → exact rerank, as
-    * two Spark jobs — one fetches the Q query vectors (vec_id < 20),
-    * one runs [[adcRerank]] over only the partitions holding a probed
-    * cell. The probe (top-nprobe cells per query by cosine to the
-    * centroid, ties on the lower cell) and the merge run on the driver:
+  /** The Q query vectors of a request: the non-null embeddings with
+    * vec_id < 20, collected to the driver. */
+  private[graft] def ivfpqQueries(spark: SparkSession,
+      dir: String): Array[(Long, Array[Float])] =
+    t(spark, dir, "embeddings").filter(col("vec_id") < 20)
+      .select(col("vec_id"), col("embedding")).collect()
+      .filter(!_.isNullAt(1))
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+
+  /** SERVE half over caller-supplied queries: coarse probe →
+    * cell-confined ADC → exact rerank, as one Spark job that runs
+    * [[adcRerank]] over only the partitions holding a probed cell. The
+    * probe (top-nprobe cells per query by cosine to the centroid, ties
+    * on the lower cell) and the merge run on the driver:
     * the global ADC top-10 of a query is drawn from the partitions'
     * top-10s, which is exact because each member of it is also in its
     * own partition's top-10; those 10 are cut to the top-k by exact
@@ -449,27 +458,22 @@ object Similarity {
     * ([[rank]], [[round6]], [[graft.functions.DotFold]]). The result is
     * a local relation of (q_id, cand_id, cos, rn) rows, computed by the
     * time this returns. */
-  private[graft] def ivfpqServe(spark: SparkSession, dir: String,
-      idx: IvfpqBlocks, k: Int = 3): DataFrame = {
-    val probes = t(spark, dir, "embeddings").filter(col("vec_id") < 20)
-      .select(col("vec_id"), col("embedding")).collect()
-      .filter(!_.isNullAt(1))
-      .map { r =>
-        val v = r.getSeq[Float](1).toArray
-        val norm = math.sqrt(DotFold.floatFloat(v, 0, v, 0, v.length))
-        val cells = idx.cells.indices.map { c =>
-          (DotFold.floatDouble(v, 0, idx.cents(c), 0,
-            math.min(v.length, idx.cents(c).length)) /
-            (norm * idx.cnorms(c)), idx.cells(c))
-        }.sortWith { case ((s1, c1), (s2, c2)) => rank(s1, c1, s2, c2) < 0 }
-        Probe(r.getLong(0), v, norm, cells.take(nprobe).map(_._2).toArray)
-      }
+  private[graft] def ivfpqSearch(spark: SparkSession, idx: IvfpqBlocks,
+      queries: Array[(Long, Array[Float])], k: Int = 3): DataFrame = {
+    val probes = queries.map { case (qId, v) =>
+      val norm = math.sqrt(DotFold.floatFloat(v, 0, v, 0, v.length))
+      val cells = idx.cells.indices.map { c =>
+        (DotFold.floatDouble(v, 0, idx.cents(c), 0,
+          math.min(v.length, idx.cents(c).length)) /
+          (norm * idx.cnorms(c)), idx.cells(c))
+      }.sortWith { case ((s1, c1), (s2, c2)) => rank(s1, c1, s2, c2) < 0 }
+      Probe(qId, v, norm, cells.take(nprobe).map(_._2).toArray)
+    }
     val parts = probes.flatMap(_.cells).map(idx.parts.getPartition)
       .distinct.sorted.toSeq
     val hits =
       if (parts.isEmpty) Array.empty[Hit]
-      else spark.sparkContext.runJob(idx.blocks,
-        (it: Iterator[(Int, CellBlock)]) => adcRerank(probes, it),
+      else spark.sparkContext.runJob(idx.blocks, new AdcRerankTask(probes),
         parts).flatten
     val rows = hits.groupBy(_.q).toSeq.sortBy(_._1).flatMap { case (q, hs) =>
       hs.sortWith((a, b) => rank(a.adc, a.cand, b.adc, b.cand) < 0)
@@ -479,6 +483,21 @@ object Similarity {
         .map { case (h, i) => Row(probes(q).qId, h.cand, h.cos, i + 1) }
     }
     spark.createDataFrame(rows.asJava, annSchema)
+  }
+
+  /** A request's task: [[adcRerank]] of one partition. A named class
+    * rather than a lambda because `SparkContext.runJob` cleans the
+    * closures it is given: for a lambda that means reading and parsing
+    * the class file of its enclosing class (all of `Similarity$`, and
+    * `SparkContext` for the wrapper of the `Iterator => U` overload) on
+    * every request, in the caller's thread, at a cost that falls as the
+    * JIT warms up. An instance of a named class is passed through. */
+  private final class AdcRerankTask(probes: Array[Probe])
+      extends ((TaskContext, Iterator[(Int, CellBlock)]) => Array[Hit])
+      with Serializable {
+    def apply(ctx: TaskContext,
+        blocks: Iterator[(Int, CellBlock)]): Array[Hit] =
+      adcRerank(probes, blocks)
   }
 
   /** One partition's share of a request: ADC of every probing query
@@ -617,19 +636,21 @@ object Similarity {
 
   /** Serve strictly FROM a persisted index — no training fallback; a
     * missing index is the caller's bug and fails loudly. A request runs
-    * only probe → ADC → rerank ([[ivfpqServe]], two Spark jobs) against
-    * the resident copy of the index, which it leases for its duration
-    * (see [[withIvfpqLease]]). */
+    * only probe → ADC → rerank ([[ivfpqSearch]], one Spark job) against
+    * the resident copy of the index and its query vectors, which it
+    * leases for its duration (see [[withIvfpqLease]]). */
   def annIvfPqServeFrom(spark: SparkSession, dir: String,
       indexDir: String): DataFrame =
-    withIvfpqLease(spark, dir, indexDir)(r => ivfpqServe(spark, dir, r.index))
+    withIvfpqLease(spark, dir, indexDir)(r =>
+      ivfpqSearch(spark, r.index, r.queries))
 
-  /** A persisted index held in memory for serving: the centroids on the
-    * driver and the per-cell blocks, N·d doubles of reconstruction plus
-    * N·d floats of raw vectors, as a lineage cut (a lost block fails the
-    * request instead of recomputing from files rewritten since).
-    * `version` is the index directory's file stamp plus the source
-    * fingerprint: the raw vectors are resident too.
+  /** A persisted index held in memory for serving: the centroids and the
+    * Q query vectors ([[ivfpqQueries]]) on the driver and the per-cell
+    * blocks, N·d doubles of reconstruction plus N·d floats of raw
+    * vectors, as a lineage cut (a lost block fails the request instead
+    * of recomputing from files rewritten since). `version` is the index
+    * directory's file stamp plus the source fingerprint: the raw and
+    * query vectors are resident too.
     *
     * Reference counted: one reference is the cache's while the copy is
     * current, one is each request's while it serves. The blocks are
@@ -637,7 +658,7 @@ object Similarity {
     * started on a copy finishes on it even if a newer version has
     * replaced it in the cache meanwhile. */
   private[graft] final class ResidentIvfpq(val version: String,
-      val index: IvfpqBlocks) {
+      val index: IvfpqBlocks, val queries: Array[(Long, Array[Float])]) {
     private val refs = new java.util.concurrent.atomic.AtomicInteger(1)
     def acquire(): ResidentIvfpq = { refs.incrementAndGet(); this }
     def release(): Unit =
@@ -698,7 +719,8 @@ object Similarity {
             spark.read.parquet(s"$indexDir/codes"),
             graft.Ckpt.scaleParts(spark, indexDir))
           val loaded = new ResidentIvfpq(version,
-            idx.copy(blocks = graft.Ckpt.cutRdd(spark, idx.blocks)))
+            idx.copy(blocks = graft.Ckpt.cutRdd(spark, idx.blocks)),
+            ivfpqQueries(spark, dir))
           // only once the new copy stands: a failed load leaves the
           // current entry, and its reference, as they were
           if (old != null) old.release()
@@ -791,8 +813,8 @@ object Similarity {
     val codes = baseCodes.select(col("cand_id"), col("codes"), col("cell"))
       .unionByName(deltaCodes
         .select(col("cand_id"), col("codes"), col("cell")))
-    ivfpqServe(spark, dir, ivfpqBlocks(spark, dir, centroids, codebook,
-      codes, graft.Ckpt.scaleParts(spark, dir)))
+    ivfpqSearch(spark, ivfpqBlocks(spark, dir, centroids, codebook, codes,
+      graft.Ckpt.scaleParts(spark, dir)), ivfpqQueries(spark, dir))
   }
 
   /** Int8 scalar quantization of the embedding column — the storage/ANN
@@ -1299,7 +1321,7 @@ object Similarity {
     val idx = ivfpqIndexDir(spark, dir)
     ensureIvfpqIndex(spark, dir, idx)
     withIvfpqLease(spark, dir, idx)(r =>
-      ivfpqServe(spark, dir, r.index, k = 5))
+      ivfpqSearch(spark, r.index, r.queries, k = 5))
       .select(col("q_id"), col("cand_id"))
   }
 

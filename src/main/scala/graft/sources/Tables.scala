@@ -34,7 +34,6 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // GRAFT_SCHEMA_MEMO=0: A/B kill-switch (measurement honesty only)
     // Cache stamp (r17, ADVICE fix): max mtime over the path AND its
     // direct children, and the child count — an in-place part-file
     // rewrite (same name) bumps the file's own mtime but not the
@@ -46,9 +45,7 @@ object Tables {
     val f = new java.io.File(path)
     val kids = Option(f.listFiles()).getOrElse(Array.empty)
     val mtime = (f.lastModified() +: kids.map(_.lastModified())).max
-    val df = if (sys.env.get("GRAFT_SCHEMA_MEMO").contains("0") ||
-        mtime == 0L)
-      spark.read.parquet(path)
+    val df = if (mtime == 0L) spark.read.parquet(path)
     else {
       val sch = schemaCache.computeIfAbsent((path, mtime, kids.length),
         _ => spark.read.parquet(path).schema)

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions.{col, lit, when}
   * concurrent first requests), reloaded after a re-persist or a source
   * rewrite, and the superseded copy's cached blocks released once no
   * request holds it. The fused serving kernel is checked across
-  * partitions (driver merge), on exact ties, and by its job count. */
+  * partitions (driver merge), on exact ties, over caller-supplied
+  * queries, and by its job count: a warm request is one job and reads
+  * no source file. */
 class IndexServeSpec extends SparkSpec {
 
   private def key(df: DataFrame): Seq[(Long, Long, Double, Int)] =
@@ -167,7 +169,7 @@ class IndexServeSpec extends SparkSpec {
       assert(cached(id), "superseded copy released while a request held it")
       // the held request still serves from its own blocks (a lineage
       // cut: released blocks would fail it, not recompute)
-      assert(key(sim.ivfpqServe(spark, sf, r.index)) === retrained)
+      assert(key(sim.ivfpqSearch(spark, r.index, r.queries)) === retrained)
       id
     }
     assert(!cached(old),
@@ -286,8 +288,8 @@ class IndexServeSpec extends SparkSpec {
     assert(after !== before)
   }
 
-  test("a warm request runs exactly two Spark jobs: query fetch and the " +
-      "fused probe/ADC/rerank pass") {
+  test("a warm request runs exactly one Spark job: the fused " +
+      "probe/ADC/rerank pass") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sim = operators.Similarity
     val sc = spark.sparkContext
@@ -307,7 +309,69 @@ class IndexServeSpec extends SparkSpec {
       try sim.annIvfPqServeFrom(spark, sf, indexDir).collect()
       finally sc.clearJobGroup()
       org.apache.spark.GraftSchedulerBridge.waitListenerBus(sc)
-      assert(jobs.get === 2)
+      assert(jobs.get === 1)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("a warm request scans no embeddings: its query vectors are part " +
+      "of the resident copy") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sim = operators.Similarity
+    val indexDir = persisted()
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit =
+        qe.analyzed.foreach {
+          case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+            fs.location.rootPaths.foreach(p => scans.add(p.toString))
+          case _ =>
+        }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        record(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = record(qe)
+    }
+    def embeddingScans(body: => Unit): Seq[String] = {
+      scans.clear()
+      spark.listenerManager.register(listener)
+      try {
+        body
+        org.apache.spark.GraftSchedulerBridge.waitListenerBus(
+          spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      scans.toArray.map(_.toString).toSeq
+        .filter(_.contains("embeddings.parquet"))
+    }
+    // the listener sees the scans of a load: the probe itself is live
+    assert(embeddingScans(
+      sim.annIvfPqServeFrom(spark, sf, indexDir).collect()).nonEmpty)
+    sim.withIvfpqLease(spark, sf, indexDir) { _ =>
+      val warm = embeddingScans(
+        assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === retrained))
+      assert(warm.isEmpty, s"a warm request scanned $warm")
+    }
+  }
+
+  test("the kernel over caller-supplied queries equals q245 at 1 and 4 " +
+      "partitions") {
+    val sim = operators.Similarity
+    val (centroids, codebook, codes) = sim.ivfpqTrainRelations(spark, sf)
+    // the caller's own read, in descending id order: the kernel neither
+    // reads the source nor depends on the order of its queries
+    val queries = spark.read.parquet(s"$sf/embeddings.parquet")
+      .filter(col("vec_id") < 20 && col("embedding").isNotNull)
+      .select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      .sortBy(-_._1)
+    assert(queries.nonEmpty)
+    Seq(1, 4).foreach { parts =>
+      val idx = sim.ivfpqBlocks(spark, sf, centroids, codebook, codes, parts)
+      assert(idx.blocks.getNumPartitions === parts)
+      assert(key(sim.ivfpqSearch(spark, idx, queries)) === retrained,
+        s"at $parts partitions")
+    }
   }
 }
