@@ -54,6 +54,14 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None => SparkEntry.queries
     }
+    // drops every (session, dir) stage memo, so the next pass builds
+    // its shared stages afresh
+    def clearStageMemos(): Unit = {
+      graft.operators.Dedup.clearStageCaches()
+      graft.operators.Graph.clearStageCaches()
+      graft.operators.Similarity.clearPc1Cache()
+      graft.operators.TextAnalysis.clearStageCaches()
+    }
     // Warm the JVM/codegen/parquet-footer paths outside any query's timing
     // (otherwise Map iteration order decides which query absorbs the
     // first-action JIT/codegen warmup — measured ~8s of pure cold-start on
@@ -76,10 +84,7 @@ object Bench {
           selected.foreach { case (_, fn) =>
             try fn(spark, wd).count() catch { case _: Throwable => }
           }
-          graft.operators.Dedup.clearStageCaches()
-          graft.operators.Graph.clearStageCaches()
-          graft.operators.Similarity.clearPc1Cache()
-          graft.operators.TextAnalysis.clearStageCaches()
+          clearStageMemos()
         }
     }
     // Platform-speed calibration: a fixed, deterministic work unit timed
@@ -90,7 +95,7 @@ object Bench {
     // calib_sec makes that factor explicit so cross-round comparisons can
     // separate "the code got slower" from "the box was slower".
     // r16 (verdict item 4): calib_sec is now DIAGNOSTIC ONLY — no path
-    // normalizes by it anymore. The r16 CalibStudy (SCALE.md) measured
+    // normalizes by it anymore. The r16 calib study (SCALE.md) measured
     // a candidate shuffle+scan replacement probe side-by-side with the
     // ALU probe and a fixed suite-query mix across quiet AND loaded
     // windows: the shuffle probe spread 45% across quiet windows
@@ -210,10 +215,7 @@ object Bench {
     // legitimate timing with no error signal in the JSON).
     def pass(sel: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]):
         Map[String, Double] = {
-      graft.operators.Dedup.clearStageCaches()
-      graft.operators.Graph.clearStageCaches()
-      graft.operators.Similarity.clearPc1Cache()
-      graft.operators.TextAnalysis.clearStageCaches()
+      clearStageMemos()
       def time(body: => Unit): Double = {
         val t0 = System.nanoTime()
         val ok = try { body; true } catch { case _: Throwable => false }
@@ -347,7 +349,7 @@ object Bench {
               "trigger is blind for the absent queries. Re-pin via " +
               "tools/repin.py from a full quiet window.")
           // RAW comparison (r16: probe normalization dropped — the
-          // CalibStudy showed no probe tracks the suite better than the
+          // calib study showed no probe tracks the suite better than the
           // suite itself; same-box spike detection was always raw in
           // effect anyway, since the decoupling guard fired on nearly
           // every same-box pair). bc/bt/bk still parsed so the pin's

@@ -1,12 +1,13 @@
 package graft
 
-/** Platform-speed calibration probe shared by Bench and ScaleProbe: a
+/** Platform-speed calibration probe behind Bench's `calib_sec`: a
   * fixed, deterministic, pure-ALU work unit (N threads × 2^27 SplitMix64
   * steps) whose wall time measures the host's effective CPU speed at the
   * probed width — including host-level contention a VM guest cannot see.
   * Two runs of the same binary were measured ×1.17–×1.31 apart with guest
-  * load ≈ 0 (SCALE.md Round 8); dividing cross-run timings by the calib
-  * ratio separates "the code got slower" from "the box was slower". */
+  * load ≈ 0 (SCALE.md Round 8); the calib ratio separates "the code got
+  * slower" from "the box was slower". A shuffle+scan Spark probe tracked
+  * the suite worse than this one (SCALE.md, r16 calib study). */
 object Calib {
 
   /** One probe at the given thread width; returns seconds. */
@@ -30,37 +31,6 @@ object Calib {
       th.start(); th
     }
     ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** min of 3 probes = the window's best-case platform speed. */
-  def min3(threads: Int): Double = (1 to 3).map(_ => probe(threads)).min
-
-  /** r16 (verdict item 4): the shipped calib probe, a fixed shuffle+scan
-    * Spark job matching the suite's actual bottleneck mix (codegen'd
-    * expression work over a scan, a hash exchange, a partial+final agg).
-    * The r15 three-window study (SCALE.md part 2) measured the pure-ALU
-    * probe above at 39% same-HEAD spread vs the suite's 7.4% — an ALU
-    * probe samples only core clock, while the suite's time is dominated
-    * by memory bandwidth + shuffle, so under host contention the two
-    * decouple and normalizing by the noisier one MULTIPLIES same-HEAD
-    * disagreement. This probe runs the same machinery the suite runs, at
-    * the session's own shuffle width; its same-HEAD spread is measured
-    * side-by-side with the ALU probe in SCALE.md (r16 calib study).
-    * Deterministic: hash/md5 over `range` ids, no time or RNG.
-    * `probe`/`min3` above remain for ScaleProbe's informational lines
-    * and pre-r16 comparability. */
-  def sparkProbe(spark: org.apache.spark.sql.SparkSession): Double = {
-    import org.apache.spark.sql.functions._
-    val t0 = System.nanoTime()
-    val n = spark.range(0L, 4L << 20, 1L, 32)
-      .selectExpr("id", "pmod(hash(id), 4096) AS k",
-        "md5(cast(id AS string)) AS s")
-      .groupBy("k")
-      .agg(count(lit(1)).as("c"), sum(length(col("s"))).as("l"),
-        max("s").as("m"))
-      .count()
-    require(n == 4096, s"calib probe returned $n groups")
     (System.nanoTime() - t0) / 1e9
   }
 }

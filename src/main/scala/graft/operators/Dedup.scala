@@ -456,9 +456,10 @@ object Dedup {
       dir: String): (DataFrame, DataFrame) = {
     val e0 = t(spark, dir, "embeddings")
     // cells of ~32 vectors: k grows with N so in-cell candidate pairs stay
-    // LINEAR in N (the weak-scaling property ScaleProbe measures); floor
-    // of 16 keeps small corpora clustered, cap bounds the centroid
-    // literal. The oracle computes the identical k from count(*).
+    // LINEAR in N (perfbench's 500- and 1000-vector inputs get k = 16
+    // and 31, sf0.1's 2000 vectors k = 62); floor of 16 keeps small
+    // corpora clustered, cap bounds the centroid literal. The oracle
+    // computes the identical k from count(*).
     val k = math.max(16L, math.min(4096L, e0.count() / 32)).toInt
     val e = e0
       .select(col("vec_id"), col("embedding"),

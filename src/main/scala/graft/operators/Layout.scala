@@ -222,25 +222,14 @@ object Layout {
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val abs = Paths.get(dir).toAbsolutePath.normalize.toString
-    val tag = md5hex(abs).take(12)
+    val tag = Tables.md5Hex(abs).take(12)
     val ot = s"graft_bk_orders_$tag"
     val lt = s"graft_bk_lineitem_$tag"
     // fingerprint of the SOURCE files the bucketed copies derive from:
     // any size/mtime/name change (regeneration in place) invalidates
-    val fp = md5hex(Seq("orders.parquet", "lineitem.parquet").flatMap {
-      sub =>
-        val p = Paths.get(abs, sub)
-        if (!Files.exists(p)) Seq.empty[String]
-        else Files.walk(p).iterator().asScala
-          .filter(Files.isRegularFile(_))
-          .map(f => s"$f:${Files.size(f)}:" +
-            s"${Files.getLastModifiedTime(f).toMillis}")
-          .toSeq.sorted
-    }.mkString("\n"))
+    val fp = Tables.fileStamp(Paths.get(abs, "orders.parquet"),
+      Paths.get(abs, "lineitem.parquet"))
     val wh = Paths.get(java.net.URI.create(
       spark.conf.get("spark.sql.warehouse.dir")).getPath)
     val marker = wh.resolve(s"graft_bk_fp_$tag")
@@ -317,17 +306,12 @@ object Layout {
         max(col("shard")).as("last_shard"))
   }
 
-  private val dppStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Stage a Hive-layout partitioned copy of orders (dirs `yr=1995/…`)
-    * plus a tiny (yr, era) dimension parquet — per-(JVM, dir) temp
-    * dirs, the q138/q142 staging discipline (fresh every JVM, so no
-    * staleness memo needed). */
+    * plus a tiny (yr, era) dimension parquet — one per (JVM, dir), the
+    * q138/q142 staging discipline ([[Relational.stagedDir]]: fresh every
+    * JVM, so no staleness memo needed, and removed at exit). */
   private[graft] def dppStage(spark: SparkSession, dir: String): String =
-    dppStaged.computeIfAbsent(dir, { _ =>
-      val b = java.nio.file.Files.createTempDirectory("graft_dpp")
-        .toString
+    Relational.stagedDir("dpp", dir) { b =>
       val o = t(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"),
           year(col("o_orderdate")).as("yr"))
@@ -337,8 +321,7 @@ object Layout {
         .withColumn("era",
           when(col("yr") >= 1999, "late").otherwise("early"))
         .write.mode("overwrite").parquet(s"$b/year_dim")
-      b
-    })
+    }
 
   /** Dynamic partition pruning — the OTHER scan-reduction lever next to
     * q157's zone maps and q188's runtime bloom filter, and the one that

@@ -123,32 +123,16 @@ object Multimodal {
     * per (JVM, sf dir) — driver-side ONLY because it simulates the
     * external input; the query itself is fully distributed. Content
     * identity is pinned via md5 so the oracle verifies exact bytes. */
-  private val binDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      binDirs.values().forEach { base =>
-        try {
-          import java.nio.file.{Files, Path}
-          Files.walk(Path.of(base))
-            .sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-        } catch { case _: Throwable => }
-      }))
-  }
-
   def binaryFileSource(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Path}
-    val base = binDirs.computeIfAbsent(dir, { _ =>
-      val b = Files.createTempDirectory("graft_binfiles").toString
+    val base = Relational.stagedDir("binfiles", dir) { b =>
       mediaTable(spark, dir).filter(col("doc_id") < 50)
         .select(col("doc_id"), col("payload")).collect()
         .foreach { r =>
           Files.write(Path.of(b, f"doc_${r.getLong(0)}%05d.bin"),
             r.getAs[Array[Byte]](1))
         }
-      b
-    })
+    }
     spark.read.format("binaryFile").load(base)
       .select(
         regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1)

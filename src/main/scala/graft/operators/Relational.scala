@@ -234,7 +234,7 @@ object Relational {
         } catch { case _: Throwable => } // best-effort cleanup only
       }))
   }
-  private[operators] def stagedDir(kind: String, dir: String)(
+  private[graft] def stagedDir(kind: String, dir: String)(
       write: String => Unit): String =
     stagedDirs.computeIfAbsent((kind, dir), { _ =>
       val base = java.nio.file.Files

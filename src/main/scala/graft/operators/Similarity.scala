@@ -566,29 +566,8 @@ object Similarity {
   /** Fingerprint of the source the index derives from (embeddings
     * parquet: per-file path, size, mtime — md5'd). */
   private[graft] def ivfpqFingerprint(dir: String): String =
-    fileStamp(java.nio.file.Paths.get(dir).toAbsolutePath.normalize
+    Tables.fileStamp(java.nio.file.Paths.get(dir).toAbsolutePath.normalize
       .resolve("embeddings.parquet"))
-
-  /** md5 over the sorted per-file `path:size:mtime` lines under `root`
-    * (empty if absent) — the one stamp walk behind both the source
-    * fingerprint and the resident index's version key. */
-  private def fileStamp(root: java.nio.file.Path): String = {
-    import java.nio.file.Files
-    val lines =
-      if (!Files.exists(root)) Seq.empty[String]
-      else {
-        val files = Files.walk(root)
-        try files.iterator().asScala
-          .filter(Files.isRegularFile(_))
-          .map(f => s"$f:${Files.size(f)}:" +
-            s"${Files.getLastModifiedTime(f).toMillis}")
-          .toSeq.sorted
-        finally files.close()
-      }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(lines.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
 
   /** Canonical per-source index location under the session warehouse
     * (md5 of the absolute source path — never a collidable hashCode). */
@@ -596,9 +575,7 @@ object Similarity {
       dir: String): String = {
     import java.nio.file.Paths
     val abs = Paths.get(dir).toAbsolutePath.normalize.toString
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      .take(12)
+    val tag = Tables.md5Hex(abs).take(12)
     Paths.get(java.net.URI.create(
         spark.conf.get("spark.sql.warehouse.dir")).getPath)
       .resolve(s"graft_ivfpq_$tag").toString
@@ -701,7 +678,7 @@ object Similarity {
       indexDir: String)(f: ResidentIvfpq => T): T = {
     val key = residentKey(spark, indexDir)
     def stamp(): String =
-      fileStamp(java.nio.file.Paths.get(key._2)) + ivfpqFingerprint(dir)
+      Tables.fileStamp(java.nio.file.Paths.get(key._2)) + ivfpqFingerprint(dir)
     // read outside the entry's lock, so concurrent requests do not queue
     // behind each other's directory walks; a mismatch is read again
     // under the lock, as `seen` may predate a copy installed meanwhile

@@ -165,8 +165,7 @@ object StreamQueries {
     // key cardinality instead. The value is pinned into the query's
     // checkpoint, so it stays consistent for the query's lifetime.
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_PARTS", "2"))
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
     // an AvailableNow replay runs 1-2 micro-batches and the checkpoint
     // is deleted on return — retaining the default 100 batches of
     // commit/offset/state history only adds maintenance file IO
@@ -189,7 +188,6 @@ object StreamQueries {
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
         "false")
     try {
-      val t0 = System.nanoTime()
       val q = transform(ev).writeStream
         .format("memory").queryName(name)
         .outputMode(mode)
@@ -197,23 +195,6 @@ object StreamQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      // floor-decomposition diagnostic (r17, VERDICT item 3): per-batch
-      // durationMs from the progress reporter + the wall segments the
-      // reporter can't see (start() latency, termination latch). Env-
-      // gated; prints to stderr; no effect when unset.
-      if (sys.env.contains("GRAFT_STREAM_PROFILE")) {
-        val wall = (System.nanoTime() - t0) / 1e9
-        val ps = q.recentProgress
-        System.err.println(f"[stream-profile] $name wall=$wall%.3fs " +
-          s"batches=${ps.length}")
-        ps.foreach { p =>
-          import scala.jdk.CollectionConverters._
-          val d = p.durationMs.asScala.toSeq.sortBy(-_._2)
-            .map { case (k, v) => s"$k=$v" }.mkString(" ")
-          System.err.println(s"[stream-profile]   batch=${p.batchId} " +
-            s"rows=${p.numInputRows} $d")
-        }
-      }
       // restore only AFTER the run: start() returns before the query
       // thread clones the session, so an earlier restore races the
       // snapshot and the stream could still see the old value

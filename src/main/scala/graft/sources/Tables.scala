@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
+import scala.jdk.CollectionConverters._
 
 /** Parquet table catalog over a driver testdata dir (`TESTDATA.md`).
   *
@@ -97,6 +98,40 @@ object Tables {
           "feed was regenerated into a form normalizeTs (the single ts " +
           "adaptation point) does not handle; add a case for it here")
     }
+  }
+
+  /** Lower-case hex MD5 of the UTF-8 bytes of `s`. */
+  private[graft] def md5Hex(s: String): String =
+    java.util.HexFormat.of().formatHex(
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")))
+
+  /** Version stamp of the files under `roots`: md5 over one
+    * `path:size:mtimeMillis` line per regular file, sorted within each
+    * root, roots in the given order (an absent root adds no line). The
+    * staleness guard of q209's bucketed copies and of the IVF-PQ index
+    * (q289) and its resident copy; persisted stamps compare as strings,
+    * so the line format is fixed. A file that vanishes between the walk
+    * and its stat is skipped, as a non-regular one is. */
+  private[graft] def fileStamp(roots: java.nio.file.Path*): String = {
+    import java.nio.file.{Files, NoSuchFileException}
+    import java.nio.file.attribute.BasicFileAttributes
+    val lines = roots.flatMap { root =>
+      if (!Files.exists(root)) Seq.empty[String]
+      else {
+        val files = Files.walk(root)
+        try files.iterator().asScala.flatMap { f =>
+          try {
+            val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+            if (a.isRegularFile)
+              Some(s"$f:${a.size}:${a.lastModifiedTime.toMillis}")
+            else None
+          } catch { case _: NoSuchFileException => None }
+        }.toSeq.sorted
+        finally files.close()
+      }
+    }
+    md5Hex(lines.mkString("\n"))
   }
 
   /** Load with a broadcast hint when the table is a constant-size dim.

@@ -117,7 +117,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("incremental session merge over a stored table written by a " +
       "DIFFERENT JVM equals the full recompute (stale target replaced)") {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val outDir = Files.createTempDirectory("sess_stage")
     val out = outDir.resolve("sessions.parquet").toString
     // stale-location handling: pre-pollute the target with a WRONG table
@@ -126,27 +126,9 @@ class AnalyticsSpec extends SparkSpec {
     Analytics.fullSessions(spark, sf)
       .filter(col("user_id") < 10)
       .write.mode("overwrite").parquet(out)
-    // fork a REAL second JVM (own SparkSession, own catalog, exits) to
-    // write yesterday's session table through the warehouse path
-    // module flags may arrive as one token ("--add-opens=m/p=ALL-…") or
-    // two ("--add-opens", "m/p=ALL-…") — keep flag+value in both shapes
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.toArray.map(_.toString).toSeq
-    val addOpens = jvmArgs.zipWithIndex.flatMap { case (a, i) =>
-      if (a.startsWith("--add-opens") || a.startsWith("--add-exports"))
-        if (a.contains("=ALL")) Seq(a)
-        else Seq(a, jvmArgs(i + 1))
-      else Seq.empty
-    }
-    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java")
-      .toString
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx4g",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.SessionStage", sf, out)
-    val proc = new ProcessBuilder(cmd: _*)
-      .redirectErrorStream(true).start()
-    val log = new String(proc.getInputStream.readAllBytes, "UTF-8")
-    assert(proc.waitFor() === 0, s"stage JVM failed:\n${log.takeRight(2000)}")
+    // a second JVM writes yesterday's session table through the
+    // warehouse path
+    forkMain("graft.SessionStage", sf, out)
     // this JVM: read the persisted table cold and run today's merge
     val stored = spark.read.parquet(out)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>

@@ -24,30 +24,6 @@ class IndexServeSpec extends SparkSpec {
         r.getAs[Double]("cos"), r.getAs[Int]("rn"))
     }.sorted.toSeq
 
-  private def stageJvm(indexDir: String): Unit = {
-    // fork a REAL second JVM (own SparkSession, own catalog, exits) to
-    // train + persist the index; module flags may arrive as one token
-    // ("--add-opens=m/p=ALL-…") or two — keep flag+value in both shapes
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.toArray.map(_.toString).toSeq
-    val addOpens = jvmArgs.zipWithIndex.flatMap { case (a, i) =>
-      if (a.startsWith("--add-opens") || a.startsWith("--add-exports"))
-        if (a.contains("=ALL")) Seq(a)
-        else Seq(a, jvmArgs(i + 1))
-      else Seq.empty
-    }
-    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java")
-      .toString
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx4g",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.IndexStage", sf, indexDir)
-    val proc = new ProcessBuilder(cmd: _*)
-      .redirectErrorStream(true).start()
-    val log = new String(proc.getInputStream.readAllBytes, "UTF-8")
-    assert(proc.waitFor() === 0,
-      s"index stage JVM failed:\n${log.takeRight(2000)}")
-  }
-
   private lazy val retrained = key(operators.Similarity.annIvfPq(spark, sf))
 
   private def persisted(): String = {
@@ -63,7 +39,7 @@ class IndexServeSpec extends SparkSpec {
       "in-memory retrain; no retrain while fresh; stale fingerprint " +
       "forces one") {
     val indexDir = Files.createTempDirectory("ivfpq_idx").toString
-    stageJvm(indexDir)
+    forkMain("graft.IndexStage", sf, indexDir)
     val marker = Paths.get(indexDir, "_fingerprint")
     assert(Files.exists(marker), "stage JVM left no fingerprint")
     val stagedFp = new String(Files.readAllBytes(marker), "UTF-8")

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev/spec-only main (not driver contract): train the IVF-PQ index and
-  * persist it to a directory, from its OWN SparkSession —
-  * `IndexServeSpec` forks this as a genuinely separate JVM so q289's
-  * serving path is proven over an index that crossed a process boundary
-  * (the production split: one indexing job, many serving sessions).
+/** Train the IVF-PQ index and persist it to a directory, from its OWN
+  * SparkSession — `IndexServeSpec` forks this ([[SparkSpec.forkMain]])
+  * as a genuinely separate JVM so q289's serving path is proven over an
+  * index that crossed a process boundary (the production split: one
+  * indexing job, many serving sessions).
   *
-  * Usage: `runMain graft.IndexStage <sfDir> <indexDir>`
+  * Usage: `graft.IndexStage <sfDir> <indexDir>`
   */
 object IndexStage {
   def main(args: Array[String]): Unit = {

@@ -2,16 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev/spec-only main (not driver contract): persist "yesterday's"
-  * session table for q243's incremental merge to a parquet path, from
-  * its OWN SparkSession — `AnalyticsSpec` forks this as a genuinely
-  * separate JVM so the q243 merge is proven over a table that crossed
-  * a process boundary through the warehouse (r10 verdict №6: the
-  * in-job `cutLineage()` simulation never leaves the JVM). Overwrite
-  * mode is the stale-location handling: a pre-existing (possibly
-  * garbage) target is replaced atomically by the parquet committer.
+/** Persist "yesterday's" session table for q243's incremental merge to
+  * a parquet path, from its OWN SparkSession — `AnalyticsSpec` forks
+  * this ([[SparkSpec.forkMain]]) as a genuinely separate JVM so the q243
+  * merge is proven over a table that crossed a process boundary through
+  * the warehouse (an in-job `cutLineage()` simulation never leaves the
+  * JVM). Overwrite mode is the stale-location handling: a pre-existing
+  * (possibly garbage) target is replaced atomically by the parquet
+  * committer.
   *
-  * Usage: `runMain graft.SessionStage <sfDir> <outPath>`
+  * Usage: `graft.SessionStage <sfDir> <outPath>`
   */
 object SessionStage {
   def main(args: Array[String]): Unit = {

@@ -173,6 +173,61 @@ class SourcesSpec extends SparkSpec {
     assert(out === want)
   }
 
+  test("Tables.fileStamp is byte-identical to the per-file size+mtime " +
+      "md5 that persisted index fingerprints and bucket markers hold") {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    // the formula stamps were persisted with, kept inline as the reference
+    def reference(roots: Path*): String = {
+      val lines = roots.flatMap { root =>
+        if (!Files.exists(root)) Seq.empty[String]
+        else Files.walk(root).iterator().asScala
+          .filter(Files.isRegularFile(_))
+          .map(f => s"$f:${Files.size(f)}:" +
+            s"${Files.getLastModifiedTime(f).toMillis}")
+          .toSeq.sorted
+      }
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(lines.mkString("\n").getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+    }
+    val d = Files.createTempDirectory("graft_stamp").toAbsolutePath
+    try {
+      Files.createDirectories(d.resolve("a/b"))
+      Seq("a/x.parquet" -> "xx", "a/b/y.parquet" -> "yyy", "_SUCCESS" -> "",
+        "a/b/.y.parquet.crc" -> "c").foreach { case (f, body) =>
+        Files.writeString(d.resolve(f), body)
+      }
+      Files.setLastModifiedTime(d.resolve("a/x.parquet"),
+        java.nio.file.attribute.FileTime.fromMillis(1234567890123L))
+      val abs = Paths.get(sf).toAbsolutePath.normalize
+      val cases = Seq(Seq(d), Seq(d.resolve("a"), d),
+        Seq(d.resolve("none")), Seq(abs.resolve("embeddings.parquet")),
+        Seq(abs.resolve("orders.parquet"), abs.resolve("lineitem.parquet")))
+      cases.foreach(roots =>
+        assert(Tables.fileStamp(roots: _*) === reference(roots: _*), roots))
+    } finally Files.walk(d).iterator().asScala.toSeq.reverse
+      .foreach(p => Files.deleteIfExists(p))
+    assert(Tables.md5Hex("graft") === java.security.MessageDigest
+      .getInstance("MD5").digest("graft".getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString)
+  }
+
+  test("q271 and q182 stage through Relational.stagedDir: a later " +
+      "stagedDir of the same (kind, dir) reuses the copy without writing") {
+    import graft.operators.{Layout, Multimodal, Relational}
+    Layout.dynamicPruning(spark, sf).collect()
+    Multimodal.binaryFileSource(spark, sf).collect()
+    Seq("dpp" -> "orders_part", "binfiles" -> "doc_00000.bin").foreach {
+      case (kind, entry) =>
+        var wrote = false
+        val base = Relational.stagedDir(kind, sf)(_ => wrote = true)
+        assert(!wrote, s"stagedDir(\"$kind\") wrote a second copy")
+        assert(Files.exists(java.nio.file.Paths.get(base, entry)),
+          s"$kind stage at $base lacks $entry")
+    }
+  }
+
   test("avro roundtrip: all five supported types + nulls survive " +
       "write/read byte-exactly; one file per non-empty partition") {
     import spark.implicits._
