@@ -54,14 +54,6 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None => SparkEntry.queries
     }
-    // drops every (session, dir) stage memo, so the next pass builds
-    // its shared stages afresh
-    def clearStageMemos(): Unit = {
-      graft.operators.Dedup.clearStageCaches()
-      graft.operators.Graph.clearStageCaches()
-      graft.operators.Similarity.clearPc1Cache()
-      graft.operators.TextAnalysis.clearStageCaches()
-    }
     // Warm the JVM/codegen/parquet-footer paths outside any query's timing
     // (otherwise Map iteration order decides which query absorbs the
     // first-action JIT/codegen warmup — measured ~8s of pure cold-start on
@@ -84,7 +76,7 @@ object Bench {
           selected.foreach { case (_, fn) =>
             try fn(spark, wd).count() catch { case _: Throwable => }
           }
-          clearStageMemos()
+          SessionMemo.clearAll()
         }
     }
     // Platform-speed calibration: a fixed, deterministic work unit timed
@@ -186,26 +178,12 @@ object Bench {
       // r14: level-1 Louvain labels shared by the census and level 2
       "stage_louvain_l1" -> Set("q347_louvain_level",
         "q353_louvain_two_level"))
-    def runStage(sname: String): Unit = sname match {
-      case "stage_cc_labels" =>
-        graft.operators.Dedup.materializeLabels(spark, sfDir)
-      case "stage_hashed_shingles" =>
-        graft.operators.Dedup.materializeShingles(spark, sfDir)
-      case "stage_minhash_sigs" =>
-        graft.operators.Dedup.materializeSigs(spark, sfDir)
-      case "stage_support2_pairs" =>
-        graft.operators.Graph.materializeSupport2(spark, sfDir)
-      case "stage_pc1" =>
-        graft.operators.Similarity.materializePc1(spark, sfDir)
-      case "stage_ivfpq_index" =>
+    // building a shared stage materializes it; the resident index is
+    // the one stage that is not a SessionMemo
+    def runStage(sname: String): Unit =
+      if (sname == "stage_ivfpq_index")
         graft.operators.Similarity.materializeIvfpqIndex(spark, sfDir)
-      case "stage_kmeans_cells" =>
-        graft.operators.Dedup.materializeCells(spark, sfDir)
-      case "stage_bpe_merges" =>
-        graft.operators.TextAnalysis.materializeBpe(spark, sfDir)
-      case "stage_louvain_l1" =>
-        graft.operators.Graph.materializeLouvainL1(spark, sfDir)
-    }
+      else SessionMemo.named(sname)(spark, sfDir)
     // Two timed passes, min per query: a single pass is exposed to
     // one-off GC/JIT/checkpoint-cleaner pauses (a 3.5 s query was
     // measured once at 12.6 s purely from a pause landing inside it);
@@ -215,7 +193,7 @@ object Bench {
     // legitimate timing with no error signal in the JSON).
     def pass(sel: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]):
         Map[String, Double] = {
-      clearStageMemos()
+      SessionMemo.clearAll()
       def time(body: => Unit): Double = {
         val t0 = System.nanoTime()
         val ok = try { body; true } catch { case _: Throwable => false }
@@ -235,7 +213,7 @@ object Bench {
         case sname if stageOf(sname).exists(sel.contains) =>
           val v = sname -> time(runStage(sname))
           // outside the timing, mirroring the ckptHeavy treatment: the
-          // PREVIOUS pass's stage checkpoints died at clearStageCaches()
+          // PREVIOUS pass's stage checkpoints died at SessionMemo.clearAll()
           // above, and their lingering executor blocks were the measured
           // multi-second variance source for whatever query ran first
           System.gc()

@@ -421,36 +421,19 @@ object Dedup {
         max(col("score")).as("cos_c"),
         first(col("qv")).as("qv"))
 
-  /** Session-scoped memo for the k-means core and its argmax
-    * assignment: FOUR catalog queries consume the identical clustering
-    * (q37 embedding dedup, q288 SemDeDup, q324 silhouette, q325
-    * Davies–Bouldin), and at 100 TB the fitted centroids + assignment
-    * are a materialized intermediate table built once per corpus
-    * generation — the [[Graph.support2Pairs]] discipline. Bench prices
-    * the build as `stage_kmeans_cells` so each consumer reports
-    * marginal cost. */
-  private val ecCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame)]()
-  private val cellsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]()
-
-  /** Bench hook: materialize centroids + assignment OUTSIDE any
-    * query's timing (see [[materializeLabels]] for the rationale). */
-  private[graft] def materializeCells(spark: SparkSession,
-                                      dir: String): Unit =
-    embeddingCells(spark, dir).count()
-
   /** The k-means core shared by [[embeddingCells]] and the
     * clustering-quality audits (q324 silhouette, q325 Davies–Bouldin):
     * the prepared embedding frame `e` (vec_id, embedding, nrm, qv) and
     * the final centroid table `cents` (cell, c) after the one exact-
-    * integer Lloyd step. Memoized per (session, dir); both frames are
-    * checkpointed so every consumer reads the materialized copy. */
-  private[graft] def kmeansEC(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) =
-    ecCache.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(spark), dir),
-      { _ => kmeansECBuild(spark, dir) })
+    * integer Lloyd step. FOUR catalog queries consume the identical
+    * clustering (q37 embedding dedup, q288 SemDeDup, q324, q325), and
+    * at 100 TB the fitted centroids + assignment are a materialized
+    * intermediate table built once per corpus generation, so both are
+    * shared stages ([[graft.SessionMemo]]); both frames are checkpointed
+    * so every consumer reads the materialized copy. Bench prices the
+    * pair as `stage_kmeans_cells`. */
+  private[graft] val kmeansEC = graft.SessionMemo("kmeans_ec",
+    graft.SessionMemo.dirStamp)(kmeansECBuild)
 
   private def kmeansECBuild(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
@@ -491,17 +474,15 @@ object Dedup {
   }
 
   /** Final (vec_id, cell) assignment of [[embeddingCosine]]'s k-means —
-    * exposed for recall/occupancy inspection in specs. Memoized +
-    * checkpointed per (session, dir) like [[kmeansEC]]. */
-  private[graft] def embeddingCells(spark: SparkSession,
-      dir: String): DataFrame =
-    cellsCache.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(spark), dir), { _ =>
-        val (e, cents) = kmeansEC(spark, dir)
-        ecAssign(e, cents)
-          .select(col("vec_id"), col("cell"), col("cos_c"))
-          .cutLineage()
-      })
+    * exposed for recall/occupancy inspection in specs; a checkpointed
+    * shared stage like [[kmeansEC]]. */
+  private[graft] val embeddingCells = graft.SessionMemo(
+      "stage_kmeans_cells", graft.SessionMemo.dirStamp) { (spark, dir) =>
+    val (e, cents) = kmeansEC(spark, dir)
+    ecAssign(e, cents)
+      .select(col("vec_id"), col("cell"), col("cos_c"))
+      .cutLineage()
+  }
 
   def embeddingCosine(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
@@ -852,57 +833,31 @@ object Dedup {
     labels
   }
 
-  /** Cluster labels are a genuine pipeline-stage artifact: q53 publishes
-    * them, q108 selects canonicals from them, q54 filters the corpus by
-    * them. Computing the iterative CC three times per run was q108's
-    * entire cost profile (r6 bench: ~3 s of its 3.9 s was the embedded
-    * re-clustering), so the labels memoize per (session, dir) — whichever
-    * consumer runs first pays, order-independent. The frame is already
-    * localCheckpointed by [[connectedComponents]], so the cache holds a
-    * materialized RDD, not a lazy lineage. [[graft.Bench]] clears it
-    * between timed passes so every pass still pays the full cost once.
-    * Keyed by `spark.sessionUUID` (unique per session for the JVM's
-    * lifetime) — an identity hash can recur for a new session after an
-    * old one is GC'd and would hand out frames bound to a stopped
-    * context. */
-  private val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** Clears every stage memo (see [[graft.SessionMemo.clearAll]]). */
+  private[graft] def clearStageCaches(): Unit = graft.SessionMemo.clearAll()
 
-  /** Drop all shared-stage memos (cluster labels + hashed shingles) so a
-    * bench pass pays every stage exactly once. */
-  private[graft] def clearStageCaches(): Unit = {
-    ccCache.clear()
-    shCache.clear()
-    ecCache.clear()
-    cellsCache.clear()
-    sigCache.clear()
-  }
-
-  /** Bench hooks: materialize a shared stage OUTSIDE any query's timing
-    * so each consumer measures its marginal cost only. Without this, the
-    * stage's build cost lands on whichever consumer happens to run first
-    * in a pass — deterministic for a FULL pass (fixed iteration order)
-    * but luck-dependent for the adaptive resample's subsets, which made
-    * one consumer's reported min swing 12× between runs of the same
-    * binary. The stage itself is timed as its own bench entry (its cost
-    * stays in the suite total exactly once), which is also the honest
-    * 100-TB accounting: these stages are materialized intermediate
-    * tables there, not part of any single downstream query. */
-  private[graft] def materializeLabels(spark: SparkSession, dir: String): Unit =
-    dupClusters(spark, dir).count()
+  /** Builds the hashed-shingle stage (the benchmark prices it alone). */
   private[graft] def materializeShingles(spark: SparkSession, dir: String): Unit =
-    hashedShingles60(spark, dir).count()
+    hashedShingles60(spark, dir)
 
   /** Duplicate-cluster resolution: connected components over the near-dup
     * pair graph (pairs are transitive in practice — a dedup pipeline keeps
-    * one doc per CLUSTER, not per pair). */
+    * one doc per CLUSTER, not per pair). The labels are a shared stage
+    * ([[graft.SessionMemo]]): q53 publishes them, q108 selects canonicals
+    * from them, q54 and q213 read them. Computing the iterative CC per
+    * consumer was q108's entire cost profile (r6 bench: ~3 s of its
+    * 3.9 s was the embedded re-clustering). The frame is already
+    * checkpointed by [[connectedComponents]], so the memo holds a
+    * materialized RDD, not a lazy lineage. */
+  private val dupLabels = graft.SessionMemo("stage_cc_labels",
+      graft.SessionMemo.dirStamp) { (spark, dir) =>
+    connectedComponents(
+      ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b")),
+      parts = graft.Ckpt.scaleParts(spark, dir))
+  }
+
   def dupClusters(spark: SparkSession, dir: String): DataFrame =
-    ccCache.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(spark), dir), { _ =>
-        connectedComponents(
-          ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b")),
-          parts = graft.Ckpt.scaleParts(spark, dir))
-      })
+    dupLabels(spark, dir)
 
   /** Canonical-document selection: after cluster resolution, a dedup
     * pipeline keeps exactly ONE representative per near-dup cluster — by
@@ -985,47 +940,37 @@ object Dedup {
     * total order preserves the prefix-filter guarantee; (freq, hash) is
     * one both engines compute identically ([[TextOps.portableHash60]] =
     * the oracle's md5-slice — the same no-collision assumption the
-    * verify stage already documents). Keyed by `spark.sessionUUID` like
-    * [[ccCache]]; the filtered corpus is derived INSIDE the builder so
-    * the cache key fully determines the cached relation (a `docs`
-    * parameter would invite callers to pass a different corpus and
-    * silently receive the first caller's shingles). */
-  private val shCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+    * verify stage already documents). The filtered corpus is derived
+    * INSIDE the builder so the memo key fully determines the relation
+    * (a `docs` parameter would invite callers to pass a different corpus
+    * and silently receive the first caller's shingles). */
+  private val hashedShingles60 = graft.SessionMemo("stage_hashed_shingles",
+      graft.SessionMemo.dirStamp) { (spark, dir) =>
+    // r17: claimed layout on the shingle hash — the frequency agg, the
+    // sh(x)freq join (both consumers) and q172's index-side probe are
+    // all keyed on h and reuse it instead of re-exchanging
+    shingleHashed(shingleCorpus(spark, dir), TextOps.portableHash60)
+      .cutLineage()
+  }
 
   /** The ≥3-words corpus both prefix-filter consumers shingle over. */
   private def shingleCorpus(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .filter(size(split(col("text"), " ")) >= 3)
 
-  private def hashedShingles60(spark: SparkSession, dir: String): DataFrame =
-    shCache.computeIfAbsent((org.apache.spark.sql.GraftBridge.sessionUUID(spark), dir), { _ =>
-      // r17: claimed layout on the shingle hash — the frequency agg, the
-      // sh(x)freq join (both consumers) and q172's index-side probe are
-      // all keyed on h and reuse it instead of re-exchanging
-      shingleHashed(shingleCorpus(spark, dir), TextOps.portableHash60)
-        .cutLineage()
-    })
-
   /** The 64-perm MinHash signature relation as a shared pipeline stage
     * (r17): q34's min-bucket candidates are rows 0–3 of the SAME
     * signature q35 bands and q267 audits, so the sketch pass (shingle +
     * hash + distinct + MinHashAgg) runs once per (session, dir) instead
-    * of once per consumer. Memo discipline identical to [[ccCache]] /
-    * [[shCache]]; [[graft.Bench]] clears it between passes and prices
-    * the build as its own stage entry. */
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+    * of once per consumer. */
+  private[graft] val minhashSigsShared = graft.SessionMemo(
+      "stage_minhash_sigs", graft.SessionMemo.dirStamp) { (spark, dir) =>
+    minhashSigs(spark, dir).cutLineage()
+  }
 
-  private[graft] def minhashSigsShared(spark: SparkSession,
-      dir: String): DataFrame =
-    sigCache.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(spark), dir), { _ =>
-        minhashSigs(spark, dir).cutLineage()
-      })
-
+  /** Builds the signature stage (the benchmark prices it alone). */
   private[graft] def materializeSigs(spark: SparkSession, dir: String): Unit =
-    minhashSigsShared(spark, dir).count()
+    minhashSigsShared(spark, dir)
 
   def setsimExact(spark: SparkSession, dir: String): DataFrame = {
     val sh = hashedShingles60(spark, dir)

@@ -1992,41 +1992,41 @@ object MlEval {
 
   private def bradleyTerrySql: String = {
     def iterSql(prev: String, k: Int): String =
-      s"""s$k AS (
+      s"""s$k AS MATERIALIZED (
         |  SELECT d.i, CAST(sum(CASE WHEN pi.p + pj.p > 0 THEN
         |    CAST(d.n AS HUGEINT) * 1000000000000 // (pi.p + pj.p)
         |    ELSE 0 END) AS HUGEINT) AS s
         |  FROM d JOIN $prev pi ON pi.i = d.i
         |    JOIN $prev pj ON pj.i = d.j
         |  GROUP BY 1),
-        |r$k AS (
+        |r$k AS MATERIALIZED (
         |  SELECT w.i, CASE WHEN s > 0 THEN
         |    CAST(w.wtot AS HUGEINT) * 1000000000000 // s
         |    ELSE 0 END AS praw
         |  FROM wins w JOIN s$k ON s$k.i = w.i),
-        |p$k AS (
+        |p$k AS MATERIALIZED (
         |  SELECT i, CASE WHEN (SELECT sum(praw) FROM r$k) > 0 THEN
         |    CAST(praw * 1000000 // (SELECT sum(praw) FROM r$k) AS BIGINT)
         |    ELSE CAST(0 AS BIGINT) END AS p
         |  FROM r$k)""".stripMargin
-    s"""WITH ob AS (
+    s"""WITH ob AS MATERIALIZED (
       |  SELECT l_orderkey AS ok, p.p_brand AS brand,
       |    max(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
       |      AS cents
       |  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
       |  GROUP BY 1, 2),
-      |m AS (
+      |m AS MATERIALIZED (
       |  SELECT a.brand AS bi, b.brand AS bj, count(*) AS n,
       |    CAST(sum(CASE WHEN a.cents > b.cents THEN 1 ELSE 0 END)
       |      AS BIGINT) AS wi
       |  FROM ob a JOIN ob b ON a.ok = b.ok AND a.brand < b.brand
       |  WHERE a.cents <> b.cents
       |  GROUP BY 1, 2),
-      |d AS (
+      |d AS MATERIALIZED (
       |  SELECT bi AS i, bj AS j, n, wi AS w FROM m
       |  UNION ALL
       |  SELECT bj AS i, bi AS j, n, n - wi AS w FROM m),
-      |wins AS (
+      |wins AS MATERIALIZED (
       |  SELECT i, CAST(sum(w) AS BIGINT) AS wtot,
       |    CAST(sum(n) AS BIGINT) AS ntot
       |  FROM d GROUP BY 1),

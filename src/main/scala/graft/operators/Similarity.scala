@@ -664,7 +664,7 @@ object Similarity {
 
   private def residentKey(spark: SparkSession,
       indexDir: String): (String, String) =
-    (org.apache.spark.sql.GraftBridge.sessionUUID(spark),
+    (graft.SessionMemo.session(spark),
       java.nio.file.Paths.get(indexDir).toAbsolutePath.normalize.toString)
 
   /** Runs `f` on the current resident copy of the index persisted at
@@ -710,13 +710,22 @@ object Similarity {
 
   /** Drop every resident index; each copy's blocks go once its last
     * request ends. */
-  private def clearResidentIvfpq(): Unit =
+  private[graft] def clearResidentIvfpq(): Unit =
     residentCache.keySet().forEach { k =>
       Option(residentCache.remove(k)).foreach(_.release())
     }
 
+  /** Forget the resident indexes of `sessions`, whose context has
+    * stopped: nothing is unpersisted on the stopped context. */
+  private[graft] def dropResidentIvfpq(sessions: String => Boolean): Unit =
+    residentCache.keySet().removeIf(k => sessions(k._1))
+
+  /** Number of resident indexes held for session `sid` (spec probe). */
+  private[graft] def residentIvfpqEntries(sid: String): Int =
+    residentCache.keySet().stream().filter(_._1 == sid).count().toInt
+
   /** Bench hook: make the resident index of `dir`'s canonical index
-    * location ready OUTSIDE any query's timing (see [[materializePc1]]). */
+    * location ready OUTSIDE any query's timing, as a stage build does. */
   private[graft] def materializeIvfpqIndex(spark: SparkSession,
       dir: String): Unit = {
     val idx = ivfpqIndexDir(spark, dir)
@@ -917,35 +926,17 @@ object Similarity {
   /** The q272 PC1 core, factored for reuse by [[embeddingDrift]]:
     * quantized (vec, dim, x) triples, the normalized covariance
     * relation and the 4-round power iterate. Identical relations to
-    * the inline q272 form (same cutLineage points). Memoized per
-    * (session, dir) like [[graft.operators.Graph.support2Pairs]] — two
-    * catalog consumers (q272, q309) would otherwise each rebuild the
-    * corpus-scaled Gram stage, and which one paid would depend on run
-    * order (the r11 q256 stage-accounting lesson); Bench prices the
-    * build as `stage_pc1` and clears the cache between passes. */
-  private val pc1Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame, DataFrame)]()
+    * the inline q272 form (same cutLineage points). A shared stage
+    * ([[graft.SessionMemo]]): two catalog consumers (q272, q309) would
+    * otherwise each rebuild the corpus-scaled Gram stage, and which one
+    * paid would depend on run order (the r11 q256 stage-accounting
+    * lesson); Bench prices the build as `stage_pc1`. */
+  private val pc1Core = graft.SessionMemo("stage_pc1",
+    graft.SessionMemo.dirStamp)(pc1CoreBuild)
 
-  /** Clears the PC1 memo and the resident IVF-PQ indexes (the one
+  /** Clears every stage memo and the resident IVF-PQ indexes (the one
     * between-pass reset Bench and the benchmark call). */
-  private[graft] def clearPc1Cache(): Unit = {
-    pc1Cache.clear()
-    clearResidentIvfpq()
-  }
-
-  /** Bench hook: materialize the shared PC1 stage OUTSIDE any query's
-    * timing (see [[graft.operators.Dedup.materializeLabels]]). */
-  private[graft] def materializePc1(spark: SparkSession,
-      dir: String): Unit = {
-    val (pts, cn, v4) = pc1Core(spark, dir)
-    pts.count(); cn.count(); v4.count()
-  }
-
-  private def pc1Core(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) =
-    pc1Cache.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(spark), dir),
-      _ => pc1CoreBuild(spark, dir))
+  private[graft] def clearPc1Cache(): Unit = graft.SessionMemo.clearAll()
 
   private def pc1CoreBuild(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {

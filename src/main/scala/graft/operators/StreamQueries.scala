@@ -29,18 +29,16 @@ object StreamQueries {
     * physical ts form has flipped once already, and the footer-derived
     * schema tracks a regeneration with no code edit. Whatever arrives,
     * Tables.normalizeTs right after the source funnels ts to LTZ.
-    * Memoized per (session, path): the footer read is a driver-side
+    * Memoized per path ([[graft.SessionMemo]]): the footer read is a driver-side
     * Spark job, and paying it once per streaming query taxed the whole
     * 22-query category ~10%. The memo is guarded by a stamp — local
     * stats plus a CRC32 of each part file's LAST 4 KiB (the parquet
     * footer, i.e. exactly the bytes whose physical ts form the memo
     * exists to track): mtime alone has 1–2 s granularity on some
     * filesystems, so a feed regenerated within the same second at the
-    * same length would otherwise hit a stale entry. A changed stamp
-    * REPLACES the entry (keyed by (session, path), not by stamp), so
-    * superseded stamps don't accumulate. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (String, StructType)]()
+    * same length would otherwise hit a stale entry. */
+  private[graft] val rawSchemaOf = graft.SessionMemo("stream_schema",
+    fileStamp)(EventStreams.eventSchemaFor)
   private val srcDirCache = new java.util.concurrent.ConcurrentHashMap[
     String, java.nio.file.Path]()
   private[graft] def fileStamp(path: String): String = {
@@ -71,22 +69,6 @@ object StreamQueries {
         } catch { case _: java.io.IOException => -1L }
       s"${x.getName}:${x.lastModified}:${x.length}:$key:$footerCrc"
     }.mkString(",")
-  }
-  private[graft] def rawSchemaOf(spark: SparkSession,
-      path: String): StructType = {
-    val stamp = fileStamp(path)
-    schemaCache.compute(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(spark), path),
-      (_, cur) =>
-        if (cur != null && cur._1 == stamp) cur
-        else (stamp, EventStreams.eventSchemaFor(spark, path)))._2
-  }
-  /** Test hook: memo entries live for this session (eviction proof). */
-  private[graft] def schemaCacheEntriesFor(spark: SparkSession): Int = {
-    val sid = org.apache.spark.sql.GraftBridge.sessionUUID(spark)
-    var n = 0
-    schemaCache.forEach((k, _) => if (k._1 == sid) n += 1)
-    n
   }
 
   /** Run a streaming transform over the events file source to completion,

@@ -849,19 +849,14 @@ object TextAnalysis {
         rtrim(regexp_replace(col("word"), "(.)", "\u0001$1\u0002 "))
           .as("s"))
 
-  private val bpeMergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[(Int, String, String, Long)]]()
-
   /** The learned merge table (gen, left, right, pair_cnt), gen 1..k in
-    * merge order. Memoized per (session, dir): q344 reports it and q345
-    * applies it, and at 100 TB the merge table is THE tokenizer artifact
-    * — built once, shipped everywhere. Bench prices the build as
-    * `stage_bpe_merges`. */
-  private[graft] def bpeMerges(spark: SparkSession,
-      dir: String): Seq[(Int, String, String, Long)] =
-    bpeMergeCache.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(spark), dir),
-      { _ => bpeMergeLoop(spark, dir, BpeK)._1 })
+    * merge order. A shared stage ([[graft.SessionMemo]]): q344 reports
+    * it and q345 applies it, and at 100 TB the merge table is THE
+    * tokenizer artifact — built once, shipped everywhere. Bench prices
+    * the build as `stage_bpe_merges`. */
+  private[graft] val bpeMerges = graft.SessionMemo("stage_bpe_merges",
+    graft.SessionMemo.dirStamp)((spark, dir) =>
+      bpeMergeLoop(spark, dir, BpeK)._1)
 
   /** The merge-learning loop, parameterized on generation count so the
     * K=20 plan-size spec can exercise the re-checkpoint guard beyond the
@@ -909,10 +904,8 @@ object TextAnalysis {
         (buf.toSeq, planNodes)
   }
 
-  private[graft] def materializeBpe(spark: SparkSession,
-      dir: String): Unit = { bpeMerges(spark, dir); () }
-
-  private[graft] def clearStageCaches(): Unit = bpeMergeCache.clear()
+  /** Clears every stage memo (see [[graft.SessionMemo.clearAll]]). */
+  private[graft] def clearStageCaches(): Unit = graft.SessionMemo.clearAll()
 
   /** q344: the learned merge table itself — one row per generation in
     * merge order, with the corpus-weighted count that elected the pair. */

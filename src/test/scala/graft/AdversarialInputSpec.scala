@@ -34,8 +34,7 @@ class AdversarialInputSpec extends SparkSpec {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   private def stage(n: Int): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_adv$n").toString
+    val dir = tempDir(s"graft_adv$n").toString
     tables.foreach { t =>
       spark.read.parquet(s"$sf/$t.parquet").limit(n)
         .coalesce(1).write.parquet(s"$dir/$t.parquet")

@@ -118,7 +118,7 @@ class AnalyticsSpec extends SparkSpec {
   test("incremental session merge over a stored table written by a " +
       "DIFFERENT JVM equals the full recompute (stale target replaced)") {
     import java.nio.file.Files
-    val outDir = Files.createTempDirectory("sess_stage")
+    val outDir = tempDir("sess_stage")
     val out = outDir.resolve("sessions.parquet").toString
     // stale-location handling: pre-pollute the target with a WRONG table
     // (sessions of a 10-user slice) — the stage JVM must replace it, not
@@ -548,8 +548,7 @@ class AnalyticsSpec extends SparkSpec {
       (2L, 20L, cut2 - 5000L),
       (3L, 30L, cut2 + 9000L),
       (9L, 90L, mx))
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_incsess").toString
+    val dir2 = tempDir("graft_incsess").toString
     planted.toDF("user_id", "event_id", "sec")
       .selectExpr("user_id", "event_id",
         "CAST(sec AS TIMESTAMP) AS ts", "'click' AS event_type",
@@ -1088,7 +1087,7 @@ class AnalyticsSpec extends SparkSpec {
   test("max concurrency: planted overlap incl. inclusive session ends") {
     import graft.operators.Analytics
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("conc").toString
+    val tmp = tempDir("conc").toString
     val t0 = 1700000000000L
     def ev(id: Long, u: Long, sec: Long) =
       (id, new java.sql.Timestamp(t0 + sec * 1000), u, "click", 1.0, "{}")
@@ -1107,7 +1106,7 @@ class AnalyticsSpec extends SparkSpec {
     import graft.operators.Analytics
     import spark.implicits._
     def stage(vals: Seq[Double]): String = {
-      val tmp = java.nio.file.Files.createTempDirectory("gini").toString
+      val tmp = tempDir("gini").toString
       vals.zipWithIndex.map { case (v, i) =>
         (i.toLong, 1L, "O", v,
           java.sql.Timestamp.valueOf("1995-06-01 00:00:00"), "1-URGENT")
@@ -1127,7 +1126,7 @@ class AnalyticsSpec extends SparkSpec {
   test("group regression: planted perfect line recovers slope and r=1") {
     import graft.operators.DataQuality
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("reg").toString
+    val tmp = tempDir("reg").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     // cents = 7·x + 500 exactly → slope 7, Pearson r 1; a second noisy
     // group pins that slices are fitted independently
@@ -1181,7 +1180,7 @@ class AnalyticsSpec extends SparkSpec {
     import spark.implicits._
     // user 1: three clicks then a 100.01 purchase → 10001 = 3334+3334+3333
     // (remainder cents go to the EARLIEST touches); user 2: unattributed
-    val tmp = java.nio.file.Files.createTempDirectory("attr").toString
+    val tmp = tempDir("attr").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     Seq(
       (1L, ts("2024-01-01 10:00:00"), 1L, "click", 0.0, "{}"),
@@ -1643,7 +1642,7 @@ class AnalyticsSpec extends SparkSpec {
     // 10-pair slope multiset [10000×3, 26667, 35000×2, 43333, 60000×3]
     // (e2-cents/month); k=5 → lower median 35000. A multiset×multiset
     // rank count sees value 10000 with clt=0, ceq=9 and mis-elects it.
-    val tmp = java.nio.file.Files.createTempDirectory("tsen").toString
+    val tmp = tempDir("tsen").toString
     Seq(0.00, 1.00, 2.00, 8.00, 14.00).zipWithIndex.map { case (p, i) =>
       (i.toLong, 1L, "O", p,
         java.sql.Timestamp.valueOf(f"1990-${i + 1}%02d-15 00:00:00"),
@@ -1690,7 +1689,7 @@ class AnalyticsSpec extends SparkSpec {
     assert(math.abs(got.getAs[Double]("z_r") - z) < 1e-5)
     // planted ties: months 1990-01..05, cents 0,100,100,800,1400 →
     // the y=100 group contributes t(t-1)(2t+5) = 18 to the correction
-    val tmp = java.nio.file.Files.createTempDirectory("mk").toString
+    val tmp = tempDir("mk").toString
     Seq(0.00, 1.00, 1.00, 8.00, 14.00).zipWithIndex.map { case (p, i) =>
       (i.toLong, 1L, "O", p,
         java.sql.Timestamp.valueOf(f"1990-${i + 1}%02d-15 00:00:00"),

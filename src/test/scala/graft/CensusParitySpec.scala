@@ -81,7 +81,7 @@ class CensusParitySpec extends SparkSpec {
 
   test("runEndToEnd: staged payloads -> CSV -> star -> chart == golden chart") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_e2e").toString
+    val base = tempDir("graft_e2e").toString
     // stage payload files (one per year) from the golden CSVs
     def stage(csvPath: String, apiCol: String, outDir: String): Unit = {
       Files.createDirectories(Paths.get(outDir))
@@ -118,7 +118,7 @@ class CensusParitySpec extends SparkSpec {
   }
 
   test("catalog DDL (S6): CREATE DATABASE/TABLE/VIEW star == golden fact") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ddl").toString
+    val base = tempDir("graft_ddl").toString
     // at-rest CSVs in the reference layout (one dir per logical table)
     Csv.write(states, s"$base/states", single = true)
     Csv.write(incomes, s"$base/median_household_incomes", single = true)
@@ -172,7 +172,7 @@ class CensusParitySpec extends SparkSpec {
 
   test("CSV sink/scan roundtrip incl. malformed-to-null (S4/S5/P6)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = tempDir("graft_csv").toString
     val df = Seq(("a", "1"), ("b", "oops"), ("c", "3")).toDF("k", "v")
     Csv.write(df, s"$tmp/t", single = true)
     val back = Csv.read(spark, s"$tmp/t", StructType(Seq(

@@ -16,7 +16,7 @@ class CkptSpec extends SparkSpec {
 
   test("q53 connected components under reliable checkpointing: identical " +
       "rows, cuts land in the checkpoint dir") {
-    val ckptDir = Files.createTempDirectory("graft_rckpt").toString
+    val ckptDir = tempDir("graft_rckpt").toString
     val base = graft.operators.Dedup.dupClusters(spark, sf).collect()
       .map(_.toSeq).toSet
     // cloned session: flag + dir scoped, parent session untouched
@@ -40,12 +40,12 @@ class CkptSpec extends SparkSpec {
   test("resident IVF-PQ blocks under reliable checkpointing: same " +
       "result, blocks checkpointed to storage and released on clear") {
     val sim = graft.operators.Similarity
-    val indexDir = Files.createTempDirectory("ivfpq_idx").toString
+    val indexDir = tempDir("ivfpq_idx").toString
     sim.ivfpqPersist(spark, sf, indexDir)
     val s2 = spark.newSession()
     s2.conf.set("spark.graft.reliableCheckpoint", "true")
     s2.conf.set("spark.graft.checkpointDir",
-      Files.createTempDirectory("graft_rckpt").toString)
+      tempDir("graft_rckpt").toString)
     def rows(s: org.apache.spark.sql.SparkSession) =
       sim.annIvfPqServeFrom(s, sf, indexDir).collect().map(_.toSeq).toSet
     assert(rows(s2) === rows(spark))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.Row
 class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    val dir = tempDir("graft_empty").toString
     val docsSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -74,8 +74,7 @@ class EmptyInputSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     for (n <- 0 to 5) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_ntile_$n").toString
+      val dir = tempDir(s"graft_ntile_$n").toString
       val rows = (1 to n).map(i => (i.toLong, i * 10.0))
       rows.toDF("o_orderkey", "o_totalprice")
         .write.parquet(s"$dir/orders.parquet")
@@ -103,8 +102,7 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   private lazy val emptyStarDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_empty_star").toString
+    val dir = tempDir("graft_empty_star").toString
     val events = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("user_id", LongType),

@@ -27,7 +27,7 @@ class IndexServeSpec extends SparkSpec {
   private lazy val retrained = key(operators.Similarity.annIvfPq(spark, sf))
 
   private def persisted(): String = {
-    val indexDir = Files.createTempDirectory("ivfpq_idx").toString
+    val indexDir = tempDir("ivfpq_idx").toString
     operators.Similarity.ivfpqPersist(spark, sf, indexDir)
     indexDir
   }
@@ -38,7 +38,7 @@ class IndexServeSpec extends SparkSpec {
   test("serving from an index persisted by a DIFFERENT JVM equals the " +
       "in-memory retrain; no retrain while fresh; stale fingerprint " +
       "forces one") {
-    val indexDir = Files.createTempDirectory("ivfpq_idx").toString
+    val indexDir = tempDir("ivfpq_idx").toString
     forkMain("graft.IndexStage", sf, indexDir)
     val marker = Paths.get(indexDir, "_fingerprint")
     assert(Files.exists(marker), "stage JVM left no fingerprint")
@@ -177,7 +177,7 @@ class IndexServeSpec extends SparkSpec {
     * their own ids: every vector of the lower half has a twin in the
     * same cell, with an identical ADC score and rounded cosine. */
   private def twinFixture(): (String, Long) = {
-    val dir = Files.createTempDirectory("ivfpq_twins").toString
+    val dir = tempDir("ivfpq_twins").toString
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val half = e.count() / 2
     val src = e.select(col("vec_id").as("src"), col("embedding"),
@@ -216,7 +216,7 @@ class IndexServeSpec extends SparkSpec {
     val prev = spark.conf.getOption(key0)
     spark.conf.set(key0, "1k")
     try {
-      val indexDir = Files.createTempDirectory("ivfpq_idx").toString
+      val indexDir = tempDir("ivfpq_idx").toString
       sim.ivfpqPersist(spark, dir, indexDir)
       assert(key(sim.annIvfPqServeFrom(spark, dir, indexDir)) === out)
     } finally prev match {
@@ -228,10 +228,10 @@ class IndexServeSpec extends SparkSpec {
   test("rewriting the source embeddings in place reloads the resident " +
       "copy; after the retrain, serving equals a fresh retrain") {
     val sim = operators.Similarity
-    val dir = Files.createTempDirectory("ivfpq_src").toString
+    val dir = tempDir("ivfpq_src").toString
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     e.coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    val indexDir = Files.createTempDirectory("ivfpq_idx").toString
+    val indexDir = tempDir("ivfpq_idx").toString
     sim.ivfpqPersist(spark, dir, indexDir)
     val before = key(sim.annIvfPqServeFrom(spark, dir, indexDir))
     assert(before === key(sim.annIvfPq(spark, dir)))

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * rule in ROADMAP aim 2: the only entry points are `Bench`, `Verify`
   * and `PlanDump`, and only `Bench` and `Verify` read the environment —
   * no dev-only `main`s, no environment switches on a hot path. A new one
-  * fails here; a spec- or study-only main belongs in `src/test`.
+  * fails here; a spec- or study-only main belongs in `src/test`. It also
+  * keeps one memo: state keyed by session goes through [[SessionMemo]].
   */
 class LibraryLintSpec extends AnyFunSuite {
 
@@ -42,6 +43,14 @@ class LibraryLintSpec extends AnyFunSuite {
     val bad = outside(mains, hits("""def main\(|extends App\b""".r))
     assert(bad.isEmpty, "\nmains outside Bench/Verify/PlanDump (move " +
       "spec-only ones to src/test):\n  " + bad.mkString("\n  "))
+  }
+
+  test("session-keyed state lives in SessionMemo alone") {
+    val bad = outside(Set("SessionMemo.scala"),
+      hits("""GraftBridge\.sessionUUID\(""".r))
+    assert(bad.isEmpty, "\nsession-keyed state outside SessionMemo (use a " +
+      "SessionMemo, or SessionMemo.session for the key):\n  " +
+      bad.mkString("\n  "))
   }
 
   test("only Bench and Verify read the environment") {

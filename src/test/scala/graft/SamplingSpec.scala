@@ -281,7 +281,7 @@ class SamplingSpec extends SparkSpec {
     // n_outliers may grow by at most the one planted row (a mean/stddev
     // z-score gate fails exactly this: one extreme inflates stddev and
     // un-flags true outliers)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mad").toString
+    val dir = tempDir("graft_mad").toString
     import spark.implicits._
     val orders = spark.read.parquet(s"$sf/orders.parquet")
       .select("o_orderpriority", "o_totalprice")

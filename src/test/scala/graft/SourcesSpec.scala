@@ -9,7 +9,7 @@ import graft.sources.{PartitionedWrite, Tables}
 class SourcesSpec extends SparkSpec {
 
   test("DSv2 census source: partition per payload file, header-derived schema") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     Files.writeString(java.nio.file.Paths.get(s"$dir/y2017.json"),
       """[["NAME","DP03_0062E","state"],["Mississippi","42009","28"],["Missouri","51542","29"]]""")
     Files.writeString(java.nio.file.Paths.get(s"$dir/y2018.json"),
@@ -27,7 +27,7 @@ class SourcesSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     // one known instant: 2024-01-05 07:30:15 UTC
     val micros = 1704439815000000L
-    val dir = Files.createTempDirectory("graft_tsforms")
+    val dir = tempDir("graft_tsforms")
     // form 1: nanosecond long (TIMESTAMP(NANOS) under nanosAsLong)
     spark.range(1).select(lit(micros * 1000L).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/ns")
@@ -51,7 +51,7 @@ class SourcesSpec extends SparkSpec {
   test("Tables.load schema memo: (mtime T, n+1 entries) and (T+1, n " +
       "entries) are different stamps") {
     import java.io.File
-    val dir = Files.createTempDirectory("graft_schemamemo").toString
+    val dir = tempDir("graft_schemamemo").toString
     val path = s"$dir/t.parquet"
     def stamp(mtime: Long): Int = {
       val d = new File(path)
@@ -79,7 +79,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned parquet write prunes partitions on year predicate") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val orders = Tables.load(spark, sf, "orders")
     PartitionedWrite.writeByYear(orders, "o_orderdate", s"$dir/orders")
     val back = PartitionedWrite.read(spark, s"$dir/orders")
@@ -95,7 +95,7 @@ class SourcesSpec extends SparkSpec {
 
   test("bucketed tables co-locate the join: no shuffle exchange") {
     import org.apache.spark.sql.functions.col
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh").toString
     val orders = Tables.load(spark, sf, "orders")
     val customer = Tables.load(spark, sf, "customer")
     spark.sql("DROP TABLE IF EXISTS b_orders")
@@ -130,7 +130,7 @@ class SourcesSpec extends SparkSpec {
   test("dynamic partition pruning fires on partitioned fact x filtered dim") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp").toString
     val orders = Tables.load(spark, sf, "orders")
     PartitionedWrite.writeByYear(orders, "o_orderdate", s"$dir/fact")
     val fact = PartitionedWrite.read(spark, s"$dir/fact")
@@ -191,7 +191,7 @@ class SourcesSpec extends SparkSpec {
         .digest(lines.mkString("\n").getBytes("UTF-8"))
         .map("%02x".format(_)).mkString
     }
-    val d = Files.createTempDirectory("graft_stamp").toAbsolutePath
+    val d = tempDir("graft_stamp").toAbsolutePath
     try {
       Files.createDirectories(d.resolve("a/b"))
       Seq("a/x.parquet" -> "xx", "a/b/y.parquet" -> "yyy", "_SUCCESS" -> "",
@@ -231,7 +231,7 @@ class SourcesSpec extends SparkSpec {
   test("avro roundtrip: all five supported types + nulls survive " +
       "write/read byte-exactly; one file per non-empty partition") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("avro_rt").toString
+    val tmp = tempDir("avro_rt").toString
     val rows = Seq(
       (1L, Some("alpha"), Some(1.5), Some(7), Some(true)),
       (2L, None, Some(-0.0), Some(-7), Some(false)),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM — Test / fork := true). */
@@ -28,9 +29,25 @@ object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A new directory under `java.io.tmpdir`, deleted with everything in
+    * it once the suite has run. */
+  protected def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
 
   /** Runs `cls`'s main in a REAL second JVM (own SparkSession, own
     * catalog, exits) on this JVM's class path — test classes included,

@@ -315,7 +315,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file streaming source: parquet dir drained incrementally") {
     import org.apache.spark.sql.functions.sum
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     val events = graft.sources.Tables.load(spark, sf, "events")
     events.limit(300).write.parquet(s"$dir/in/batch1")
     // file source reads the dir as an unbounded stream of new files
@@ -343,7 +343,7 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch sink: idempotent per-batch parquet writes") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_feb").toString
+    val dir = tempDir("graft_feb").toString
     val ms = MemoryStream[RawEv]
     val q = ms.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -585,16 +585,16 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
       "state.RocksDBStateStoreProvider")
     spark.conf.set("spark.sql.shuffle.partitions", "2")
-    val srcDir = Files.createTempDirectory("graft_resume_src")
-    val ckpt = Files.createTempDirectory("graft_resume_ckpt")
-    val outDir = Files.createTempDirectory("graft_resume_out")
+    val srcDir = tempDir("graft_resume_src")
+    val ckpt = tempDir("graft_resume_ckpt")
+    val outDir = tempDir("graft_resume_out")
     try {
       def ns(hhmm: String): Long =
         ts(s"2024-01-01 $hhmm:00").getTime * 1000000L
       def stage(name: String,
           rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
         import spark.implicits._
-        val tmp = Files.createTempDirectory("graft_resume_stage")
+        val tmp = tempDir("graft_resume_stage")
         rows.toDF("event_id", "ts", "user_id", "event_type", "value",
           "props")
           // the feed's physical shape: TIMESTAMP(MICROS) without UTC
@@ -709,14 +709,14 @@ class StreamingSpec extends SparkSpec {
       "ntz" -> timestamp_micros(col("us")).cast("timestamp_ntz"),
       "ltz" -> timestamp_micros(col("us"))) // the normalized target
     val outs = forms.map { case (form, tsCol) =>
-      val dir = Files.createTempDirectory(s"graft_form_$form").toString
+      val dir = tempDir(s"graft_form_$form").toString
       base.select(col("event_id"), tsCol.as("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
         .coalesce(1).write.mode("overwrite").parquet(dir)
       val ev = sources.Tables.normalizeTs(
         spark.readStream.schema(StreamQueries.rawSchemaOf(spark, dir))
           .parquet(dir))
-      val ckpt = Files.createTempDirectory(s"graft_form_ckpt_$form")
+      val ckpt = tempDir(s"graft_form_ckpt_$form")
       val q = EventStreams.tumblingCounts(ev).writeStream
         .format("memory").queryName(s"form_$form")
         .outputMode(OutputMode.Complete)
@@ -746,10 +746,10 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.StreamQueries
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val srcDir = Files.createTempDirectory("graft_ewma_src")
+    val srcDir = tempDir("graft_ewma_src")
     def stage(name: String, mtimeSec: Long,
         rows: Seq[(Long, String, Long, String, Double)]): Unit = {
-      val tmp = Files.createTempDirectory("graft_ewma_stage")
+      val tmp = tempDir("graft_ewma_stage")
       rows.toDF("event_id", "tss", "user_id", "event_type", "value")
         .withColumn("props", lit("{}"))
         .withColumn("ts",
@@ -776,7 +776,7 @@ class StreamingSpec extends SparkSpec {
         .schema(StreamQueries.rawSchemaOf(spark, srcDir.toString))
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir.toString))
-    val ckpt = Files.createTempDirectory("graft_ewma_ckpt")
+    val ckpt = tempDir("graft_ewma_ckpt")
     val q = EventStreams.ewmaStateful(
       ev.select(col("user_id"), col("event_id"), col("ts"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
@@ -829,10 +829,10 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.StreamQueries
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val srcDir = Files.createTempDirectory("graft_feb_src")
+    val srcDir = tempDir("graft_feb_src")
     def stage(name: String, mtimeSec: Long,
         rows: Seq[(Long, String, Long, String, Double)]): Unit = {
-      val tmp = Files.createTempDirectory("graft_feb_stage")
+      val tmp = tempDir("graft_feb_stage")
       rows.toDF("event_id", "tss", "user_id", "event_type", "value")
         .withColumn("props", lit("{}"))
         .withColumn("ts",
@@ -854,7 +854,7 @@ class StreamingSpec extends SparkSpec {
     stage("b2.parquet", 2000L, Seq(
       (4L, "2024-01-01 00:03:10", 1L, "purchase", 8.0),
       (5L, "2024-01-01 00:04:10", 3L, "click", 16.0)))
-    val stateDir = Files.createTempDirectory("graft_feb_state")
+    val stateDir = tempDir("graft_feb_state")
     def committed(): Seq[Long] = Files.list(stateDir).iterator().asScala
       .map(_.getFileName.toString).filter(_.startsWith("c"))
       .map(_.drop(1).toLong).toSeq
@@ -885,7 +885,7 @@ class StreamingSpec extends SparkSpec {
         .schema(StreamQueries.rawSchemaOf(spark, srcDir.toString))
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir.toString))
-    val ckpt = Files.createTempDirectory("graft_feb_ckpt")
+    val ckpt = tempDir("graft_feb_ckpt")
     val q = ev.writeStream
       .foreachBatch((df: DataFrame, id: Long) => applyBatch(df, id))
       .option("checkpointLocation", ckpt.toString)
@@ -991,7 +991,7 @@ class StreamingSpec extends SparkSpec {
     // 1) content fingerprint at the fileStamp level: same name, mtime
     // and length, different (footer) bytes → different stamps. mtime is
     // pinned EXACTLY, modeling the 1–2 s filesystem granularity window.
-    val dir = Files.createTempDirectory("graft_stamp").toString
+    val dir = tempDir("graft_stamp").toString
     val f = Paths.get(dir, "part-0000.parquet")
     Files.write(f, Array.fill[Byte](8192)(1))
     f.toFile.setLastModified(1700000000000L)
@@ -1005,10 +1005,10 @@ class StreamingSpec extends SparkSpec {
     // 2) memo eviction: regenerating a real feed updates the schema in
     // place — the superseded stamp's entry is REPLACED, not leaked.
     import spark.implicits._
-    val feed = Files.createTempDirectory("graft_stamp_feed").toString
+    val feed = tempDir("graft_stamp_feed").toString
     Seq((1L, "a")).toDF("event_id", "event_type")
       .coalesce(1).write.mode("overwrite").parquet(feed)
-    val before = StreamQueries.schemaCacheEntriesFor(spark)
+    val before = SessionMemo.entriesFor(spark)
     val sch1 = StreamQueries.rawSchemaOf(spark, feed)
     assert(sch1.fieldNames.toSeq === Seq("event_id", "event_type"))
     Seq((1L, "a", 2.0)).toDF("event_id", "event_type", "value")
@@ -1018,7 +1018,7 @@ class StreamingSpec extends SparkSpec {
       "stale schema served after feed regeneration")
     // re-read with no change: memo hit, still the new schema
     assert(StreamQueries.rawSchemaOf(spark, feed) === sch2)
-    assert(StreamQueries.schemaCacheEntriesFor(spark) === before + 1,
+    assert(SessionMemo.entriesFor(spark) === before + 1,
       "superseded stamp entries accumulated in the session cache")
   }
 }

@@ -46,7 +46,7 @@ class VectorSpec extends SparkSpec {
     // round(cos, 6); this fixture seeds such a cosine into each path's
     // candidate set and pins the positive-zero bit pattern end-to-end.
     import graft.operators.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("veczero").toString
+    val tmp = tempDir("veczero").toString
     val pad = Array.fill(7)(0f)
     val b = java.lang.Math.nextUp(0.5f) // 8*(0.25^2) - b = -5.96e-8
     val rows = Seq(
@@ -78,7 +78,7 @@ class VectorSpec extends SparkSpec {
     // rank cluster mates at the top — recall@3 against the exact
     // brute-force top-3 pins the quantizer's retrieval quality.
     import graft.operators.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("vecpq").toString
+    val tmp = tempDir("vecpq").toString
     val rnd = new scala.util.Random(42)
     val bases = Array.fill(10)(Array.fill(64)(rnd.nextFloat() * 2f - 1f))
     val rows = for (lab <- 0 until 10; i <- 0 until 10) yield {

@@ -43,7 +43,7 @@ class AvroWriteProtocolSpec extends graft.SparkSpec {
 
   test("task retry: failed attempt aborts cleanly, the retry's commit " +
       "is the only visible output") {
-    val dir = Files.createTempDirectory("avro_retry").toString
+    val dir = tempDir("avro_retry").toString
     val f = factory(dir)
     // attempt 0 (taskId 100): writes one row, then the task fails
     val a0 = f.createWriter(0, 100L)
@@ -69,7 +69,7 @@ class AvroWriteProtocolSpec extends graft.SparkSpec {
   test("speculative duplicates: both attempts finish, only the " +
       "coordinator-chosen one commits; the loser aborts without " +
       "touching the winner") {
-    val dir = Files.createTempDirectory("avro_spec").toString
+    val dir = tempDir("avro_spec").toString
     val f = factory(dir)
     val win = f.createWriter(0, 200L)
     val lose = f.createWriter(0, 201L)
@@ -84,7 +84,7 @@ class AvroWriteProtocolSpec extends graft.SparkSpec {
 
   test("job abort: a task-committed temp is removed by the driver " +
       "abort, nothing becomes visible") {
-    val dir = Files.createTempDirectory("avro_abort").toString
+    val dir = tempDir("avro_abort").toString
     val f = factory(dir)
     val a = f.createWriter(0, 300L)
     a.write(row(1L, "doomed"))
@@ -99,7 +99,7 @@ class AvroWriteProtocolSpec extends graft.SparkSpec {
       "sweep); a mixed commit adds no extra file for empty partitions") {
     // all partitions empty -> exactly one empty part-0.avro, so a
     // subsequent read finds a header and returns zero rows
-    val dir = Files.createTempDirectory("avro_empty").toString
+    val dir = tempDir("avro_empty").toString
     val f = factory(dir)
     val a = f.createWriter(3, 400L)
     val msg = a.commit() // never wrote a row
@@ -108,7 +108,7 @@ class AvroWriteProtocolSpec extends graft.SparkSpec {
     assert(readBack(dir).isEmpty)
     // mixed: the empty partition's None message contributes nothing
     // beyond the real partition's file
-    val dir2 = Files.createTempDirectory("avro_mixed").toString
+    val dir2 = tempDir("avro_mixed").toString
     val f2 = factory(dir2)
     val w = f2.createWriter(0, 500L)
     w.write(row(1L, "a"))
@@ -121,7 +121,7 @@ class AvroWriteProtocolSpec extends graft.SparkSpec {
   test("end-to-end df.write path: fresh directory, exactly one file " +
       "per non-empty partition, round-trip intact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("avro_e2e").toString + "/out"
+    val dir = tempDir("avro_e2e").toString + "/out"
     val df = (1L to 20L).map(i => (i, s"v$i")).toDF("id", "s")
       .repartition(4)
     AvroIo.write(df, dir)
