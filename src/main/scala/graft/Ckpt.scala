@@ -38,18 +38,15 @@ object Ckpt {
     * this reproduces the coalescing decision AQE would have made: at
     * sf0.1 (~17 MB inputs) that is 1 — exactly what AQE picks for these
     * shuffles; at 100 TB it saturates the configured shuffle width.
-    * Memoized per dir (a directory stat walk, metadata only). */
-  private val dirBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    * Read on every call, so a dir rewritten in place gets its new
+    * width (a directory stat walk, metadata only). */
   def scaleParts(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int = {
-    val bytes: Long = dirBytesCache.computeIfAbsent(dir, { d =>
-      def sz(f: java.io.File): Long =
-        if (f.isDirectory)
-          Option(f.listFiles()).map(_.map(sz).sum).getOrElse(0L)
-        else f.length()
-      java.lang.Long.valueOf(sz(new java.io.File(d)))
-    })
+    def sz(f: java.io.File): Long =
+      if (f.isDirectory)
+        Option(f.listFiles()).map(_.map(sz).sum).getOrElse(0L)
+      else f.length()
+    val bytes = sz(new java.io.File(dir))
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
         .getOrElse("64MB"))

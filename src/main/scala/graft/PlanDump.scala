@@ -118,9 +118,10 @@ object PlanDump {
         ("snapshot reconciliation: scan-local md5 fingerprints, " +
           "full-outer hash join shuffles (key, fp, cents) — never rows"),
       "q201_ann_pq" ->
-        ("product-quantization ANN: broadcast sub-codebooks, mergeable " +
-          "min_by code assignment, compressed-domain ADC scan, exact " +
-          "rerank joins raw vectors for top-10 only"),
+        ("product-quantization ANN: sub-codebooks on the driver, one " +
+          "narrow encode-and-reconstruct map over the embeddings, " +
+          "compressed-domain ADC scan, exact rerank joins raw vectors " +
+          "for top-10 only"),
       "q202_manifest_decontaminate" ->
         ("external-manifest decontamination: one bloom over all " +
           "manifests' shingles prefilters the corpus stream, exact join " +

@@ -3,13 +3,13 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
-  StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
+  LongType, StructType}
 import graft.Ckpt.CutOps
 import graft.Q
 import graft.functions.{CentroidAggregator, DotFold, VectorOps}
@@ -97,9 +97,7 @@ object Similarity {
     * cosine is the q38-proven widened-float form. */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = t(spark, dir, "embeddings")
-      .withColumn("qv", transform(col("embedding"), x =>
-        floor(lit(1000.0) * x.cast("double") + lit(0.5)).cast("long")))
+    val e = quantized(t(spark, dir, "embeddings"))
     // cell index: label -> exact-grid centroid (typed aggregation,
     // partial-agg merge: one (dim+1)-long buffer per cell on the shuffle)
     val centroids = e.select(col("label"), col("qv"))
@@ -155,17 +153,17 @@ object Similarity {
     * search scans codes, not vectors. Codebooks are the q48 exact-grid
     * label centroids SLICED per subspace (the mean of a slice is the
     * slice of the mean — deterministic, cross-engine-exact "training");
-    * assignment is argmin L2² to the sub-codebook (ties → lowest code;
-    * mergeable `min_by` over a (dist, code) struct). The ADC pass scores
-    * every candidate by the cosine of the query against the candidate's
-    * RECONSTRUCTED vector (codeword concat) — compressed-domain math
-    * only — keeps the top-10, and an exact rerank over just those 10
-    * raw vectors emits the final top-3: the standard
+    * assignment is argmin L2² to the sub-codebook, ties → lowest code.
+    * Both are [[ivfpqTrainRelationsFrom]]'s, shared with q245. The ADC
+    * pass scores every candidate by the cosine of the query against the
+    * candidate's RECONSTRUCTED vector ([[Codebook.decode]]) —
+    * compressed-domain math only — keeps the top-10, and an exact rerank
+    * over just those 10 raw vectors emits the final top-3: the standard
     * coarse-search/rerank split of FAISS-style serving.
     *
-    * Scale shape: codebooks are tiny (M·cells·subdim doubles →
-    * broadcast); assignment is one narrow pass; ADC is O(Q·N) over
-    * M-byte codes — deliberately FLAT here (the exhaustive-PQ tier);
+    * Scale shape: codebooks are tiny (M·cells·subdim doubles, on the
+    * driver); encode and reconstruction are narrow maps; ADC is O(Q·N)
+    * over M-byte codes — deliberately FLAT here (the exhaustive-PQ tier);
     * [[annIvfPq]] (q245) is the composed serving plan that probes q48's
     * cells first and cuts the ADC to nprobe/cells of N; the rerank
     * fetches raw vectors for only Q·10 candidates via an equi-join.
@@ -174,43 +172,14 @@ object Similarity {
     * oracle's. */
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val M = 4
-    val sub = 16
-    val e = t(spark, dir, "embeddings")
-      .withColumn("qv", transform(col("embedding"), x =>
-        floor(lit(1000.0) * x.cast("double") + lit(0.5)).cast("long")))
-    val centroids = e.select(col("label"), col("qv"))
-      .as[(Int, Array[Long])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(CentroidAggregator.toColumn)
-      .toDF("cell", "c")
-    val codebook = centroids.select(col("cell").as("code"),
-      explode(expr(s"transform(sequence(0, ${M - 1}), " +
-        s"m -> struct(m AS m, slice(c, m * $sub + 1, $sub) AS cw))"))
-        .as("s"))
-      .select(col("s.m").as("m"), col("code"), col("s.cw").as("cw"))
-    val subv = e.select(col("vec_id").as("cand_id"),
-      explode(expr(s"transform(sequence(0, ${M - 1}), " +
-        s"m -> struct(m AS m, slice(qv, m * $sub + 1, $sub) AS sv))"))
-        .as("s"))
-      .select(col("cand_id"), col("s.m").as("m"), col("s.sv").as("sv"))
-    val codes = subv.join(broadcast(codebook), Seq("m"))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(sv, cw, (x, y) -> " +
-          "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), " +
-          "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"))
-      .groupBy(col("cand_id"), col("m"))
-      .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
-    // reconstruction: concat the M codewords in subspace order (the map
-    // lookup pins order — collect_list alone is partition-order-dependent)
-    val recon = codes.join(broadcast(codebook), Seq("m", "code"))
-      .groupBy(col("cand_id"))
-      .agg(map_from_entries(collect_list(struct(col("m"), col("cw"))))
-        .as("mp"))
-      .select(col("cand_id"),
-        concat((0 until M).map(m => col("mp")(m)): _*).as("rvec"))
-      .withColumn("rn2", VectorOps.l2NormDouble(col("rvec")))
+    val e = quantized(t(spark, dir, "embeddings"))
+    val (_, codebook, codes) = ivfpqTrainRelationsFrom(spark, e)
+    val recon = codes.as[(Long, Array[Int], Int)]
+      .map { case (id, cs, _) =>
+        val r = codebook.decode(cs)
+        (id, r, norm(r))
+      }
+      .toDF("cand_id", "rvec", "rn2")
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
         VectorOps.l2Norm(col("embedding")).as("qn"))
@@ -249,9 +218,9 @@ object Similarity {
     *
     * Structure sharing: the coarse quantizer IS q48's exact-grid label
     * centroid table and the codebooks/codes/reconstruction ARE q201's
-    * (slice-of-the-mean sub-codebooks, argmin-L2² assignment, map-pinned
-    * concat) — same exact-arithmetic guarantees, so ADC ranks and the
-    * candidate CUT are bit-identical to the oracle's.
+    * (slice-of-the-mean sub-codebooks, argmin-L2² assignment,
+    * subspace-ordered concat) — same exact-arithmetic guarantees, so ADC
+    * ranks and the candidate CUT are bit-identical to the oracle's.
     *
     * Scale shape at 100 TB: code assignment is one narrow pass over N,
     * and the candidates are grouped once into per-cell blocks
@@ -268,81 +237,143 @@ object Similarity {
       graft.Ckpt.scaleParts(spark, dir)), ivfpqQueries(spark, dir))
   }
 
+  /** The embeddings with their exact-grid vectors `qv`: each element as
+    * `floor(1000·x + 0.5)`, a long, so sums of them are exact. */
+  private def quantized(e: DataFrame): DataFrame =
+    e.withColumn("qv", transform(col("embedding"), x =>
+      floor(lit(1000.0) * x.cast("double") + lit(0.5)).cast("long")))
+
   /** TRAIN half of the IVF-PQ index — everything [[ivfpqPersist]] needs
     * to write and a fresh JVM needs to serve: the coarse quantizer
-    * (q48's exact-grid label centroids), the M=4 sub-codebooks (q201's
-    * slice-of-the-mean), and the PER-CANDIDATE index entry
-    * (cand_id, cell, codes array ordered by subspace — the packed-code
-    * row a production FAISS index stores per vector). Deterministic and
-    * cross-engine-exact end-to-end, so serving from a persisted copy is
-    * bit-identical to retraining (the q289 gate proves it against the
+    * (q48's exact-grid label centroids, a local relation of (cell, c)),
+    * the M=4 sub-codebooks (q201's slice-of-the-mean, on the driver),
+    * and the PER-CANDIDATE index entry (cand_id, codes array ordered by
+    * subspace, cell — the packed-code row a production FAISS index
+    * stores per vector). Deterministic and cross-engine-exact
+    * end-to-end, so serving from a persisted copy is bit-identical to
+    * retraining (the q289 gate proves it against the
     * retrain-from-scratch oracle). */
   private[graft] def ivfpqTrainRelations(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val e = t(spark, dir, "embeddings")
-      .withColumn("qv", transform(col("embedding"), x =>
-        floor(lit(1000.0) * x.cast("double") + lit(0.5)).cast("long")))
-    ivfpqTrainRelationsFrom(spark, e)
-  }
+      dir: String): (DataFrame, Codebook, DataFrame) =
+    ivfpqTrainRelationsFrom(spark, quantized(t(spark, dir, "embeddings")))
 
   /** Same, over an explicit (vec_id, label, embedding, qv) slice —
-    * [[annIvfPqAppend]] freezes the quantizer on yesterday's slice. */
+    * [[annIvfPqAppend]] freezes the quantizer on yesterday's slice. The
+    * centroid aggregate runs once and is collected (cells·d doubles,
+    * as the serving probe collects them); the codes are a narrow pass
+    * over the slice ([[pqCodes]]). */
   private def ivfpqTrainRelationsFrom(spark: SparkSession,
-      e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+      e: DataFrame): (DataFrame, Codebook, DataFrame) = {
     import spark.implicits._
-    val M = 4
-    val sub = 16
-    val centroids = e.select(col("label"), col("qv"))
+    val cents = e.select(col("label"), col("qv"))
       .as[(Int, Array[Long])]
       .groupByKey(_._1)
       .mapValues(_._2)
       .agg(CentroidAggregator.toColumn)
-      .toDF("cell", "c")
-    val codebook = centroids.select(col("cell").as("code"),
-      explode(expr(s"transform(sequence(0, ${M - 1}), " +
-        s"m -> struct(m AS m, slice(c, m * $sub + 1, $sub) AS cw))"))
-        .as("s"))
-      .select(col("s.m").as("m"), col("code"), col("s.cw").as("cw"))
-    val subv = e.select(col("vec_id").as("cand_id"),
-      explode(expr(s"transform(sequence(0, ${M - 1}), " +
-        s"m -> struct(m AS m, slice(qv, m * $sub + 1, $sub) AS sv))"))
-        .as("s"))
-      .select(col("cand_id"), col("s.m").as("m"), col("s.sv").as("sv"))
-    // one packed row per candidate: cell + the M codes in subspace order
-    // (map_from_entries pins order — collect_list alone is
-    // partition-order-dependent)
-    val codes = subv.join(broadcast(codebook), Seq("m"))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(sv, cw, (x, y) -> " +
-          "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), " +
-          "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"))
-      .groupBy(col("cand_id"), col("m"))
-      .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
-      .groupBy(col("cand_id"))
-      .agg(map_from_entries(collect_list(struct(col("m"), col("code"))))
-        .as("cm"))
-      .select(col("cand_id"),
-        array((0 until M).map(m => col("cm")(m)): _*).as("codes"))
-      .join(e.select(col("vec_id").as("cand_id"),
-        col("label").as("cell")), Seq("cand_id"))
-    (centroids, codebook, codes)
+      .collect().sortBy(_._1)
+    val codebook = Codebook.sliced(cents)
+    (cents.toSeq.toDF("cell", "c"), codebook, pqCodes(spark, e, codebook))
   }
 
-  /** Reconstruct candidate vectors from packed codes + codebooks:
-    * (cand_id, cell, rvec, rn2). Codeword concat order is pinned by the
-    * subspace index. */
-  private def ivfpqRecon(codes: DataFrame, codebook: DataFrame): DataFrame = {
-    val M = 4
-    codes.select(col("cand_id"), col("cell"),
-        posexplode(col("codes")).as(Seq("m", "code")))
-      .join(broadcast(codebook), Seq("m", "code"))
-      .groupBy(col("cand_id"))
-      .agg(first(col("cell")).as("cell"),
-        map_from_entries(collect_list(struct(col("m"), col("cw"))))
-          .as("mp"))
-      .select(col("cand_id"), col("cell"),
-        concat((0 until M).map(m => col("mp")(m)): _*).as("rvec"))
-      .withColumn("rn2", VectorOps.l2NormDouble(col("rvec")))
+  /** The index entries (cand_id, codes, cell) of a (vec_id, label, qv)
+    * slice, the label as the cell: one narrow map that encodes each
+    * row against `codebook` ([[Codebook.encode]]). A row without a
+    * vector, or an empty codebook, yields no entry. */
+  private def pqCodes(spark: SparkSession, e: DataFrame,
+      codebook: Codebook): DataFrame = {
+    import spark.implicits._
+    e.select(col("vec_id"), col("qv"), col("label"))
+      .as[(Long, Array[Long], Int)]
+      .flatMap { case (id, qv, cell) =>
+        if (qv == null || codebook.codes.isEmpty) None
+        else Some(Row(id, codebook.encode(qv), cell))
+      }(Encoders.row(codesSchema))
+  }
+
+  /** The schema of the `codes` table, nullability included. */
+  private val codesSchema = new StructType()
+    .add("cand_id", LongType)
+    .add("codes", ArrayType(IntegerType, containsNull = true),
+      nullable = false)
+    .add("cell", IntegerType)
+
+  private val pqM = 4
+  private val pqSub = 16
+
+  /** `sqrt` of the left fold of x·x from 0.0: the value of
+    * [[graft.functions.VectorOps.l2NormDouble]]. */
+  private def norm(v: Array[Double]): Double =
+    math.sqrt(v.foldLeft(0.0)((s, x) => s + x * x))
+
+  /** The M=4 PQ sub-codebooks, held on the driver and shipped in the
+    * closures of the narrow passes that use them. A code is a cell id;
+    * `codes` ascend, and `words(m)(j)` is subspace m's codeword for
+    * `codes(j)`. */
+  private[graft] final class Codebook(val codes: Array[Int],
+      val words: Array[Array[Array[Double]]]) extends Serializable {
+
+    /** Per subspace m, the code whose codeword is nearest to slice m of
+      * `qv`: Σ(x−y)² with x widened to double, folded left from 0.0, as
+      * the oracle computes it; ties go to the lower code. */
+    def encode(qv: Array[Long]): Array[Int] = Array.tabulate(pqM) { m =>
+      val off = m * pqSub
+      var best = 0
+      var bestD = 0.0
+      var j = 0
+      while (j < codes.length) {
+        val w = words(m)(j)
+        val n = math.min(w.length, qv.length - off)
+        var d = 0.0
+        var i = 0
+        while (i < n) {
+          val x = qv(off + i).toDouble - w(i)
+          d += x * x
+          i += 1
+        }
+        if (j == 0 || d < bestD) { best = j; bestD = d }
+        j += 1
+      }
+      codes(best)
+    }
+
+    /** The reconstructed vector of codes `cs`: their codewords
+      * concatenated in subspace order. */
+    def decode(cs: Array[Int]): Array[Double] = {
+      val ws = Array.tabulate(pqM)(m =>
+        words(m)(java.util.Arrays.binarySearch(codes, cs(m))))
+      val out = new Array[Double](ws.map(_.length).sum)
+      var off = 0
+      ws.foreach { w =>
+        System.arraycopy(w, 0, out, off, w.length)
+        off += w.length
+      }
+      out
+    }
+
+    /** The persisted `codebook` table: one (m, code, cw) row per
+      * codeword. */
+    def table(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      (for (m <- 0 until pqM; j <- codes.indices)
+        yield (m, codes(j), words(m)(j))).toDF("m", "code", "cw")
+    }
+  }
+
+  private[graft] object Codebook {
+    /** Trained from the cells' centroids, by ascending cell: codeword
+      * (m, cell) is slice m of the cell's centroid. */
+    def sliced(cents: Array[(Int, Array[Double])]): Codebook =
+      new Codebook(cents.map(_._1), Array.tabulate(pqM)(m =>
+        cents.map(_._2.slice(m * pqSub, (m + 1) * pqSub))))
+
+    /** Collected from a `codebook` table ([[Codebook.table]]). */
+    def of(table: DataFrame): Codebook = {
+      val cw = table.select(col("m"), col("code"), col("cw")).collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
+        .toMap
+      val codes = cw.keys.map(_._2).toArray.distinct.sorted
+      new Codebook(codes, Array.tabulate(pqM)(m => codes.map(c => cw((m, c)))))
+    }
   }
 
   /** An IVF-PQ index in serving form: the coarse quantizer on the
@@ -362,48 +393,76 @@ object Similarity {
       val emb: Array[Float], val cn: Array[Double]) extends Serializable
 
   private object CellBlock {
-    /** From one cell's (cell, cand_id, rvec, rn2, embedding, cn) rows. */
-    def of(rows: Iterable[Row]): CellBlock = {
-      val rs = rows.toArray.sortBy(_.getLong(1))
-      val rd = rs.head.getSeq[Double](2).length
-      val ed = rs.head.getSeq[Float](4).length
-      val rvec = new Array[Double](rs.length * rd)
-      val emb = new Array[Float](rs.length * ed)
-      rs.indices.foreach { i =>
-        val (rv, ev) = (rs(i).getSeq[Double](2), rs(i).getSeq[Float](4))
-        require(rv.length == rd && ev.length == ed,
-          s"cell ${rs(i).getInt(0)} holds vectors of unequal length")
-        rv.copyToArray(rvec, i * rd)
-        ev.copyToArray(emb, i * ed)
+    /** One partition's (cell, cand_id) → (codes, embedding) rows, in
+      * key order, streamed into one block per cell: `rvec` is
+      * `codebook`'s reconstruction of the codes, `rn2` its [[norm]], and
+      * `cn` the raw vector's norm by [[DotFold]], the fold of
+      * `VectorOps.l2Norm`. */
+    def stream(codebook: Codebook)(rows: Iterator[((Int, Long),
+        (Array[Int], Array[Float]))]): Iterator[(Int, CellBlock)] = {
+      val in = rows.buffered
+      new Iterator[(Int, CellBlock)] {
+        def hasNext: Boolean = in.hasNext
+        def next(): (Int, CellBlock) = {
+          val cell = in.head._1._1
+          val ids = Array.newBuilder[Long]
+          val rvec = Array.newBuilder[Double]
+          val rn2 = Array.newBuilder[Double]
+          val emb = Array.newBuilder[Float]
+          val cn = Array.newBuilder[Double]
+          var (rd, ed) = (-1, -1)
+          while (in.hasNext && in.head._1._1 == cell) {
+            val ((_, id), (cs, v)) = in.next()
+            val r = codebook.decode(cs)
+            if (rd < 0) { rd = r.length; ed = v.length }
+            require(r.length == rd && v.length == ed,
+              s"cell $cell holds vectors of unequal length")
+            ids += id
+            rvec.addAll(r)
+            rn2 += norm(r)
+            emb.addAll(v)
+            cn += math.sqrt(DotFold.floatFloat(v, 0, v, 0, ed))
+          }
+          cell -> new CellBlock(ids.result(), rd, rvec.result(),
+            rn2.result(), ed, emb.result(), cn.result())
+        }
       }
-      new CellBlock(rs.map(_.getLong(1)), rd, rvec, rs.map(_.getDouble(3)),
-        ed, emb, rs.map(_.getDouble(5)))
     }
+  }
+
+  /** Places a (cell, cand_id) key in the partition `byCell` gives its
+    * cell: the placement [[ivfpqSearch]] targets. */
+  private final class CellPartitioner(byCell: HashPartitioner)
+      extends org.apache.spark.Partitioner {
+    def numPartitions: Int = byCell.numPartitions
+    def getPartition(key: Any): Int =
+      byCell.getPartition(key.asInstanceOf[(Int, Long)]._1)
   }
 
   /** Serving form of the index relations (from memory for q245/q290,
     * from the persisted copy for q289): collects the centroids and
-    * groups the reconstructed candidates, joined to their raw vectors,
-    * into per-cell blocks. Every norm is computed here, once, by the
-    * Spark kernels. The block RDD is lazy and not cached. */
+    * packs the candidates, joined to their raw vectors, into per-cell
+    * blocks without holding rows: each row goes to its cell's partition,
+    * the partition is sorted by (cell, cand_id), and it streams into its
+    * blocks ([[CellBlock.stream]]). The block RDD is lazy and not
+    * cached. */
   private[graft] def ivfpqBlocks(spark: SparkSession, dir: String,
-      centroids: DataFrame, codebook: DataFrame, codes: DataFrame,
+      centroids: DataFrame, codebook: Codebook, codes: DataFrame,
       parts: Int): IvfpqBlocks = {
-    val cs = centroids.select(col("cell"), col("c"),
-        VectorOps.l2NormDouble(col("c")))
-      .collect().sortBy(_.getInt(0))
+    import spark.implicits._
+    val cs = centroids.select(col("cell"), col("c"))
+      .as[(Int, Array[Double])].collect().sortBy(_._1)
     val byCell = new HashPartitioner(parts)
-    val blocks = ivfpqRecon(codes, codebook)
+    val blocks = codes
       .join(t(spark, dir, "embeddings").select(col("vec_id").as("cand_id"),
-        col("embedding"), VectorOps.l2Norm(col("embedding")).as("cn")),
-        Seq("cand_id"))
-      .select(col("cell"), col("cand_id"), col("rvec"), col("rn2"),
-        col("embedding"), col("cn"))
-      .rdd.map(r => (r.getInt(0), r))
-      .groupByKey(byCell)
-      .mapValues(CellBlock.of)
-    IvfpqBlocks(cs.map(_.getInt(0)), cs.map(_.getSeq[Double](1).toArray),
-      cs.map(_.getDouble(2)), blocks, byCell)
+        col("embedding")), Seq("cand_id"))
+      .select(col("cell"), col("cand_id"), col("codes"), col("embedding"))
+      .as[(Int, Long, Array[Int], Array[Float])].rdd
+      .map { case (cell, id, c, v) => ((cell, id), (c, v)) }
+      .repartitionAndSortWithinPartitions(new CellPartitioner(byCell))
+      .mapPartitions(CellBlock.stream(codebook))
+    IvfpqBlocks(cs.map(_._1), cs.map(_._2), cs.map(c => norm(c._2)),
+      blocks, byCell)
   }
 
   /** A query of one request with its probed cells. */
@@ -544,7 +603,9 @@ object Similarity {
   }
 
   /** Persist the trained IVF-PQ index — centroids, sub-codebooks, and
-    * the packed per-candidate code rows — plus the SOURCE fingerprint
+    * the packed per-candidate code rows, each computed once: the two
+    * small tables from the driver's quantizer, one file each, and the
+    * codes by one narrow pass — plus the SOURCE fingerprint
     * that guards staleness (q209's discipline: per-file size + mtime,
     * so data regenerated in place under the same path retrains instead
     * of silently serving a stale index). At 100 TB this is the step
@@ -556,8 +617,10 @@ object Similarity {
       indexDir: String): Unit = {
     import java.nio.file.{Files, Paths}
     val (centroids, codebook, codes) = ivfpqTrainRelations(spark, dir)
-    centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
+    centroids.coalesce(1).write.mode("overwrite")
+      .parquet(s"$indexDir/centroids")
+    codebook.table(spark).coalesce(1).write.mode("overwrite")
+      .parquet(s"$indexDir/codebook")
     codes.write.mode("overwrite").parquet(s"$indexDir/codes")
     Files.write(Paths.get(indexDir, "_fingerprint"),
       ivfpqFingerprint(dir).getBytes("UTF-8"))
@@ -692,7 +755,7 @@ object Similarity {
           residentLoads.incrementAndGet()
           val idx = ivfpqBlocks(spark, dir,
             spark.read.parquet(s"$indexDir/centroids"),
-            spark.read.parquet(s"$indexDir/codebook"),
+            Codebook.of(spark.read.parquet(s"$indexDir/codebook")),
             spark.read.parquet(s"$indexDir/codes"),
             graft.Ckpt.scaleParts(spark, indexDir))
           val loaded = new ResidentIvfpq(version,
@@ -750,11 +813,7 @@ object Similarity {
     * the gate proves the incremental path equals the protocol — the
     * same serve==retrain argument as q289, one step further. */
   def annIvfPqAppend(spark: SparkSession, dir: String): DataFrame = {
-    val M = 4
-    val sub = 16
-    val eAll = t(spark, dir, "embeddings")
-      .withColumn("qv", transform(col("embedding"), x =>
-        floor(lit(1000.0) * x.cast("double") + lit(0.5)).cast("long")))
+    val eAll = quantized(t(spark, dir, "embeddings"))
     val cut = eAll.agg(expr("4 * count(1) div 5").as("b"))
     val base = eAll.crossJoin(broadcast(cut))
       .filter(col("vec_id") < col("b")).drop("b")
@@ -776,29 +835,11 @@ object Similarity {
       .groupBy(col("cand_id"))
       .agg(max_by(col("cell"),
         struct(col("score"), (-col("cell")).as("nc"))).as("cell"))
-    // delta fine assignment: argmin L2² to the FROZEN sub-codebooks
-    val deltaCodes = delta
-      .select(col("vec_id").as("cand_id"),
-        explode(expr(s"transform(sequence(0, ${M - 1}), " +
-          s"m -> struct(m AS m, slice(qv, m * $sub + 1, $sub) AS sv))"))
-          .as("s"))
-      .select(col("cand_id"), col("s.m").as("m"), col("s.sv").as("sv"))
-      .join(broadcast(codebook), Seq("m"))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(sv, cw, (x, y) -> " +
-          "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), " +
-          "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"))
-      .groupBy(col("cand_id"), col("m"))
-      .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
-      .groupBy(col("cand_id"))
-      .agg(map_from_entries(collect_list(struct(col("m"), col("code"))))
-        .as("cm"))
-      .select(col("cand_id"),
-        array((0 until M).map(m => col("cm")(m)): _*).as("codes"))
+    // delta fine assignment: the same encode against the FROZEN
+    // sub-codebooks
+    val deltaCodes = pqCodes(spark, delta, codebook).drop("cell")
       .join(deltaCells, Seq("cand_id"))
-    val codes = baseCodes.select(col("cand_id"), col("codes"), col("cell"))
-      .unionByName(deltaCodes
-        .select(col("cand_id"), col("codes"), col("cell")))
+    val codes = baseCodes.unionByName(deltaCodes)
     ivfpqSearch(spark, ivfpqBlocks(spark, dir, centroids, codebook, codes,
       graft.Ckpt.scaleParts(spark, dir)), ivfpqQueries(spark, dir))
   }

@@ -55,4 +55,21 @@ class CkptSpec extends SparkSpec {
     sim.clearPc1Cache()
     assert(!spark.sparkContext.getPersistentRDDs.contains(id))
   }
+
+  test("scaleParts reads a dir rewritten in place at its new size") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    try {
+      val d = tempDir("graft_parts")
+      Files.write(d.resolve("a.bin"), new Array[Byte](100))
+      assert(Ckpt.scaleParts(spark, d.toString) === 1)
+      Files.write(d.resolve("b.bin"), new Array[Byte](3000))
+      assert(Ckpt.scaleParts(spark, d.toString) > 1,
+        "scaleParts kept the width of the dir before it grew")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -350,4 +350,196 @@ class IndexServeSpec extends SparkSpec {
         s"at $parts partitions")
     }
   }
+
+  /** The index relations as the Spark plan computed them before the
+    * quantizer moved to the driver, kept inline as the reference: the
+    * centroid aggregate, the codebook exploded from it, and per
+    * candidate and subspace the `min_by` of the codeword distances,
+    * packed by subspace and joined to the label. */
+  private def referenceTrain(dir: String): (DataFrame, DataFrame,
+      DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val session = spark
+    import session.implicits._
+    val (m, sub) = (4, 16)
+    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      .withColumn("qv", transform(col("embedding"), x =>
+        floor(lit(1000.0) * x.cast("double") + lit(0.5)).cast("long")))
+    val centroids = e.select(col("label"), col("qv"))
+      .as[(Int, Array[Long])]
+      .groupByKey(_._1)
+      .mapValues(_._2)
+      .agg(functions.CentroidAggregator.toColumn)
+      .toDF("cell", "c")
+    val codebook = centroids.select(col("cell").as("code"),
+      explode(expr(s"transform(sequence(0, ${m - 1}), " +
+        s"m -> struct(m AS m, slice(c, m * $sub + 1, $sub) AS cw))"))
+        .as("s"))
+      .select(col("s.m").as("m"), col("code"), col("s.cw").as("cw"))
+    val subv = e.select(col("vec_id").as("cand_id"),
+      explode(expr(s"transform(sequence(0, ${m - 1}), " +
+        s"m -> struct(m AS m, slice(qv, m * $sub + 1, $sub) AS sv))"))
+        .as("s"))
+      .select(col("cand_id"), col("s.m").as("m"), col("s.sv").as("sv"))
+    val codes = subv.join(broadcast(codebook), Seq("m"))
+      .withColumn("dist", expr(
+        "aggregate(zip_with(sv, cw, (x, y) -> " +
+          "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), " +
+          "CAST(0 AS DOUBLE), (acc, z) -> acc + z)"))
+      .groupBy(col("cand_id"), col("m"))
+      .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
+      .groupBy(col("cand_id"))
+      .agg(map_from_entries(collect_list(struct(col("m"), col("code"))))
+        .as("cm"))
+      .select(col("cand_id"),
+        array((0 until m).map(i => col("cm")(i)): _*).as("codes"))
+      .join(e.select(col("vec_id").as("cand_id"),
+        col("label").as("cell")), Seq("cand_id"))
+    (centroids, codebook, codes)
+  }
+
+  /** A table's rows rendered exactly (doubles by their bits), sorted. */
+  private def rendered(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+      case xs: scala.collection.Seq[_] => xs.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+        case x => String.valueOf(x)
+      }.mkString("[", ",", "]")
+      case x => String.valueOf(x)
+    }.mkString("|")).toSeq.sorted
+
+  /** Parquet schema and Spark row metadata of a written table's first
+    * part file. */
+  private def footer(table: String): (String, String) = {
+    import scala.jdk.CollectionConverters._
+    val f = Files.list(Paths.get(table)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString).head
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString),
+        new org.apache.hadoop.conf.Configuration()))
+    try {
+      val meta = r.getFooter.getFileMetaData
+      (meta.getSchema.toString, meta.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+    } finally r.close()
+  }
+
+  /** The sf embeddings plus a copy of the highest label's rows under a
+    * new label below every other, with new ids: the two labels' vector
+    * sets, centroids and codewords are identical, so every code either
+    * could take is a tie, which the lower (new) label must win. */
+  private def codewordTieFixture(): (String, Int, Int) = {
+    val dir = tempDir("ivfpq_cwtie").toString
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+    val r = e.agg(org.apache.spark.sql.functions.max("label"),
+      org.apache.spark.sql.functions.min("label"),
+      org.apache.spark.sql.functions.max("vec_id")).head()
+    val (hi, lo) = (r.getInt(0), r.getInt(1) - 1)
+    e.unionByName(e.filter(col("label") === hi)
+        .withColumn("vec_id", col("vec_id") + r.getLong(2) + 1)
+        .withColumn("label", lit(lo)))
+      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    (dir, hi, lo)
+  }
+
+  test("the driver-side encode equals the DataFrame encode: centroids, " +
+      "codebook and codes tables, also on tied codewords, and persists " +
+      "the same parquet schemas") {
+    val sim = operators.Similarity
+    val (tieDir, hi, lo) = codewordTieFixture()
+    Seq(sf, tieDir).foreach { dir =>
+      val (rc, rb, rk) = referenceTrain(dir)
+      val (c, b, k) = sim.ivfpqTrainRelations(spark, dir)
+      assert(rendered(c) === rendered(rc), s"centroids of $dir")
+      assert(rendered(b.table(spark)) === rendered(rb), s"codebook of $dir")
+      assert(rendered(k) === rendered(rk), s"codes of $dir")
+      assert(rendered(k).nonEmpty)
+    }
+    val codes = sim.ivfpqTrainRelations(spark, tieDir)._3.collect()
+      .flatMap(_.getSeq[Int](1))
+    assert(codes.contains(lo) && !codes.contains(hi),
+      s"tied codewords of labels $lo and $hi did not go to $lo")
+    // the persisted tables keep their parquet schemas
+    val indexDir = persisted()
+    val refDir = tempDir("ivfpq_ref").toString
+    val (rc, rb, rk) = referenceTrain(sf)
+    rc.write.parquet(s"$refDir/centroids")
+    rb.write.parquet(s"$refDir/codebook")
+    rk.write.parquet(s"$refDir/codes")
+    Seq("centroids", "codebook", "codes").foreach { t =>
+      assert(footer(s"$indexDir/$t") === footer(s"$refDir/$t"), t)
+    }
+  }
+
+  test("the codes are one narrow pass over the embeddings: no Exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val (_, _, codes) = operators.Similarity.ivfpqTrainRelations(spark, sf)
+    // the helper looks inside adaptive plans and their query stages
+    val plan = codes.queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case x: Exchange => x
+    }
+    assert(exchanges.isEmpty, s"the codes plan exchanges:\n$plan")
+  }
+
+  test("the streamed cell blocks equal a groupByKey of the reconstructed " +
+      "rows, array for array and partition for partition, at 1 and 4 " +
+      "partitions") {
+    import org.apache.spark.HashPartitioner
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    val sim = operators.Similarity
+    val (centroids, codebook, codes) = sim.ivfpqTrainRelations(spark, sf)
+    // the reference build: reconstruct by joining the codebook table,
+    // join the raw vectors, group boxed rows by cell, sort by id
+    val recon = codes.select(col("cand_id"), col("cell"),
+        posexplode(col("codes")).as(Seq("m", "code")))
+      .join(broadcast(codebook.table(spark)), Seq("m", "code"))
+      .groupBy(col("cand_id"))
+      .agg(first(col("cell")).as("cell"),
+        map_from_entries(collect_list(struct(col("m"), col("cw"))))
+          .as("mp"))
+      .select(col("cand_id"), col("cell"),
+        concat((0 until 4).map(m => col("mp")(m)): _*).as("rvec"))
+      .withColumn("rn2", functions.VectorOps.l2NormDouble(col("rvec")))
+      .join(spark.read.parquet(s"$sf/embeddings.parquet").select(
+        col("vec_id").as("cand_id"), col("embedding"),
+        functions.VectorOps.l2Norm(col("embedding")).as("cn")),
+        Seq("cand_id"))
+      .select(col("cell"), col("cand_id"), col("rvec"), col("rn2"),
+        col("embedding"), col("cn"))
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    def of(rows: Iterable[Row]): Seq[Any] = {
+      val rs = rows.toArray.sortBy(_.getLong(1))
+      Seq(rs.map(_.getLong(1)).toSeq,
+        rs.flatMap(_.getSeq[Double](2)).map(bits).toSeq,
+        rs.map(r => bits(r.getDouble(3))).toSeq,
+        rs.flatMap(_.getSeq[Float](4))
+          .map(java.lang.Float.floatToRawIntBits).toSeq,
+        rs.map(r => bits(r.getDouble(5))).toSeq)
+    }
+    def flat(b: sim.CellBlock): Seq[Any] =
+      Seq(b.ids.toSeq, b.rvec.map(bits).toSeq, b.rn2.map(bits).toSeq,
+        b.emb.map(java.lang.Float.floatToRawIntBits).toSeq,
+        b.cn.map(bits).toSeq)
+    Seq(1, 4).foreach { parts =>
+      val want = recon.rdd.map(r => (r.getInt(0), r))
+        .groupByKey(new HashPartitioner(parts))
+        .mapPartitionsWithIndex((p, it) =>
+          it.map { case (cell, rows) => (cell, p, rows.toSeq) })
+        .collect().map { case (cell, p, rows) => cell -> (p, of(rows)) }
+      val idx = sim.ivfpqBlocks(spark, sf, centroids, codebook, codes, parts)
+      val got = idx.blocks
+        .mapPartitionsWithIndex((p, it) =>
+          it.map { case (cell, b) => (cell, p, b) })
+        .collect().map { case (cell, p, b) => cell -> (p, flat(b)) }
+      assert(got.map(_._1).distinct.length === got.length,
+        "a cell split over two blocks")
+      assert(got.toMap === want.toMap, s"at $parts partitions")
+      assert(want.nonEmpty)
+    }
+  }
 }
