@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump formatted physical plans of representative queries to
-  * PLANS.md (run: `sbt "runMain graft.PlanDump"`). Not driver contract. */
+  * PLANS.md, the whole file (run: `sbt "runMain graft.PlanDump"`). Not
+  * driver contract. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -29,8 +30,13 @@ object PlanDump {
       "q12_topk" -> "top-k: TakeOrderedAndProject, no global sort",
       "q35_dedup_minhash" -> "MinHash: ObjectHashAggregate partial+final, band candidates",
       "q37_dedup_embedding" ->
-        ("cell-bucketed near-dup: broadcast-hash centroid scoring, " +
-          "in-cell candidates, exact verify on candidates only"),
+        ("cell-bucketed near-dup: in-cell candidates from the " +
+          "checkpointed k-means cells stage (one narrow nearest-centroid " +
+          "map), exact verify on candidates only"),
+      "q48_ann_ivf" ->
+        ("IVF ANN: label centroids collected into the driver-side " +
+          "quantizer, one narrow probe map, exact search within the " +
+          "probed cell"),
       "q61_ntile" -> "quartiles from order statistics: no window, no sort",
       "q31_tumbling_window" -> "event-time tumbling window",
       "q68_range_join" -> "range join: equi-key hash join + interval post-filter",
@@ -118,10 +124,9 @@ object PlanDump {
         ("snapshot reconciliation: scan-local md5 fingerprints, " +
           "full-outer hash join shuffles (key, fp, cents) — never rows"),
       "q201_ann_pq" ->
-        ("product-quantization ANN: sub-codebooks on the driver, one " +
-          "narrow encode-and-reconstruct map over the embeddings, " +
-          "compressed-domain ADC scan, exact rerank joins raw vectors " +
-          "for top-10 only"),
+        ("product-quantization ANN: the q245 kernel probing every cell " +
+          "(flat ADC over all codes, exact rerank of the top-10); the " +
+          "plan is a LocalRelation of the Q*k result rows"),
       "q202_manifest_decontaminate" ->
         ("external-manifest decontamination: one bloom over all " +
           "manifests' shingles prefilters the corpus stream, exact join " +
@@ -232,8 +237,8 @@ object PlanDump {
           "ADC/rerank pass); the plan is a LocalRelation of the Q*k " +
           "result rows, computed at call time"),
       "q290_ann_append" ->
-        ("incremental index append: frozen quantizer broadcast to the " +
-          "delta's one narrow assignment pass (probe argmax + argmin " +
+        ("incremental index append: the frozen quantizer assigns and " +
+          "encodes the delta in one narrow map (nearest cell + argmin " +
           "codes), code union into call-time per-cell blocks, then the " +
           "q245 serving kernel; the plan is a LocalRelation of the Q*k " +
           "result rows"),
@@ -318,13 +323,13 @@ object PlanDump {
           "Newton steps are cell-local integer sums + exact Cramer " +
           "solve, beta broadcast back"),
       "q324_silhouette" ->
-        ("silhouette audit: broadcast-scored k x N relation, one " +
-          "row_number window keyed on vec_id for the top-2 centroids, " +
-          "ppm-quantized per-cell integer means"),
+        ("silhouette audit: the top-2 centroids per vector from one " +
+          "narrow map over the driver-side quantizer, ppm-quantized " +
+          "per-cell integer means"),
       "q325_davies_bouldin" ->
         ("Davies-Bouldin: assignment partial agg (scatter) + k x k " +
-          "bounded centroid pair join (separation) — corpus-size-" +
-          "independent pair stage"),
+          "centroid pair join over the quantizer's local relation " +
+          "(separation) — corpus-size-independent pair stage"),
       "q326_bradley_terry" ->
         ("Bradley-Terry MM: in-row pair expansion over the sorted " +
           "per-order brand array (one groupBy shuffle), bounded " +
@@ -431,6 +436,10 @@ object PlanDump {
       "skewed partition (vs q45's manual salting)\n\n```\n")
     sb.append(skew.queryExecution.executedPlan.toString)
     sb.append("```\n")
+    // the audit is BoundedWindowSpec's measurement, not a plan dump
+    sb.append("\n## Bounded-window audit\n\nEvery unpartitioned Window " +
+      "site of the catalog and its measured row bound: " +
+      "[plans/bounded_windows.md](plans/bounded_windows.md).\n")
     Files.writeString(Paths.get(outPath), sb.toString)
     println(s"wrote $outPath")
     spark.stop()

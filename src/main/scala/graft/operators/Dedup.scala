@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Ckpt.CutOps
 import graft.Q
-import graft.functions.{TextOps, VectorOps}
+import graft.functions.{CoarseQuantizer, TextOps, VectorOps}
 import graft.sources.Tables
 
 /** Deduplication operators for LLM training-data pipelines: exact,
@@ -383,60 +383,31 @@ object Dedup {
     * both engines; assignment scores are per-row left-to-right folds.
     * Two Lloyd rounds, ties broken by cell id.
     *
-    * Scale shape: quantize/assign are narrow per-row passes against a
-    * broadcast k-row centroid table; centroid recompute is a mergeable
-    * integer aggregate on (cell, dim); candidate generation is the
-    * in-cell pair expansion (one shuffle on cell); verify touches
-    * candidates only. At 100 TB, k grows with N (cells of ~constant
-    * size) and assignment uses an ANN probe instead of the dense k-scan,
-    * but the pipeline shape is unchanged. */
-  /** Broadcast-scored (vec, cell) relation: every vector against every
-    * centroid, with the cosine score — the single k·N pass that both the
-    * argmax assignment ([[ecAssign]]) and the top-2 silhouette audit
-    * (q324) read. See [[embeddingCells]] for the join-shape rationale. */
-  private def ecScored(e: DataFrame, cents: DataFrame): DataFrame =
-    e.withColumn("jk", col("vec_id") * 0)
-      .join(broadcast(cents
-        // per-cell constant — computed k times here instead of N·k times
-        // inside the scoring row; same IEEE sequence, same value
-        .withColumn("cnorm", VectorOps.l2NormDouble(col("c")))
-        .withColumn("jk", col("cell").cast("long") * 0)), Seq("jk"))
-      .withColumn("score",
-        VectorOps.dotFloatDouble(col("embedding"), col("c")) /
-          (col("nrm") * col("cnorm")))
-
-  /** Nearest-centroid argmax over [[ecScored]]: max_by over (score,
-    * -cell) is a MERGEABLE aggregate, so the k scored rows per vector
-    * collapse map-side and the shuffle carries one row per vector.
-    * Ties → lowest cell id, matching the oracle's (score DESC, cell
-    * ASC) row_number. */
-  private def ecAssign(e: DataFrame, cents: DataFrame): DataFrame =
-    ecScored(e, cents)
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cell"),
-        struct(col("score"), (-col("cell")).as("nc"))).as("cell"),
-        // the winning score IS max(score) (ties differ only in cell),
-        // kept so semanticDedup can rank members by centroid proximity
-        // without re-scoring; q37 simply doesn't select it
-        max(col("score")).as("cos_c"),
-        first(col("qv")).as("qv"))
-
+    * Scale shape: quantize/assign are narrow per-row passes against the
+    * k-centroid [[graft.functions.CoarseQuantizer]] shipped from the
+    * driver; centroid recompute is the mergeable integer
+    * [[graft.functions.CentroidAggregator]] mean on cell; candidate
+    * generation is the in-cell pair expansion (one shuffle on cell);
+    * verify touches candidates only. At 100 TB, k grows with N (cells
+    * of ~constant size) and assignment uses an ANN probe instead of the
+    * dense k-scan, but the pipeline shape is unchanged. */
   /** The k-means core shared by [[embeddingCells]] and the
     * clustering-quality audits (q324 silhouette, q325 Davies–Bouldin):
     * the prepared embedding frame `e` (vec_id, embedding, nrm, qv) and
-    * the final centroid table `cents` (cell, c) after the one exact-
-    * integer Lloyd step. FOUR catalog queries consume the identical
+    * the final centroids, as a quantizer on the driver, after the one
+    * exact-integer Lloyd step. FOUR catalog queries consume the identical
     * clustering (q37 embedding dedup, q288 SemDeDup, q324, q325), and
     * at 100 TB the fitted centroids + assignment are a materialized
     * intermediate table built once per corpus generation, so both are
-    * shared stages ([[graft.SessionMemo]]); both frames are checkpointed
-    * so every consumer reads the materialized copy. Bench prices the
-    * pair as `stage_kmeans_cells`. */
+    * shared stages ([[graft.SessionMemo]]); `e` is checkpointed so
+    * every consumer reads the materialized copy. Bench prices the pair
+    * as `stage_kmeans_cells`. */
   private[graft] val kmeansEC = graft.SessionMemo("kmeans_ec",
     graft.SessionMemo.dirStamp)(kmeansECBuild)
 
   private def kmeansECBuild(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
+      dir: String): (DataFrame, CoarseQuantizer) = {
+    import spark.implicits._
     val e0 = t(spark, dir, "embeddings")
     // cells of ~32 vectors: k grows with N so in-cell candidate pairs stay
     // LINEAR in N (perfbench's 500- and 1000-vector inputs get k = 16
@@ -450,27 +421,43 @@ object Dedup {
         transform(col("embedding"), x =>
           floor(lit(1000.0) * x.cast("double") + lit(0.5)).cast("long"))
           .as("qv"))
-    // Nearest centroid by cosine. The centroid table (k rows) joins via
-    // BroadcastHashJoin on a constant derived key — `vec_id * 0` is
-    // deliberately column-derived, NOT a literal: a literal key would
-    // constant-fold into a nested-loop cross join, while a non-foldable
-    // expression keeps the equi-join (and Catalyst can't fold x*0 under
-    // null semantics). Scoring + argmax live in [[ecScored]]/[[ecAssign]].
-    val seeds = e.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int").as("cell"),
-        transform(col("qv"), v => v.cast("double")).as("c"))
-    // one Lloyd step in exact integer space: per-(cell, dim) sums are
-    // order-invariant bigints, so the recomputed centroid doubles are
+      .cutLineage()
+    // the seeds: the k lowest vec_ids' own grid vectors; a vector
+    // without one joins no centroid's mean, so it seeds no cell
+    val seeds = CoarseQuantizer(e.filter(col("vec_id") < k)
+      .select(col("vec_id").cast("int"), col("qv"))
+      .as[(Int, Array[Long])].collect()
+      .collect { case (cell, qv) if qv != null => cell -> qv.map(_.toDouble) })
+    // one Lloyd step in exact integer space: per-cell sums are
+    // order-invariant longs, so the recomputed centroid doubles are
     // bit-identical in any engine
-    val cents = ecAssign(e, seeds)
-      .select(col("cell"), posexplode(col("qv")).as(Seq("pos", "qx")))
-      .groupBy(col("cell"), col("pos"))
-      .agg(sum(col("qx")).as("s"), count(lit(1)).as("cnt"))
-      .groupBy(col("cell"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("s"), col("cnt")))),
-        x => x.getField("s").cast("double") / x.getField("cnt")).as("c"))
-    (e.cutLineage(), cents.cutLineage())
+    val cents = CoarseQuantizer.fit(e.select(col("embedding"), col("qv"))
+      .as[(Array[Float], Array[Long])]
+      .flatMap { case (v, qv) =>
+        if (v == null) None else seeds.nearest(v, 1).map(_._1 -> qv)
+      })
+    (e, cents)
+  }
+
+  /** The `n` cells of `q` nearest to `v`, best first, with their
+    * scores. A null vector scores null against every centroid, which
+    * Spark orders below every score, so its cells are the `n` lowest,
+    * scoreless. */
+  private def nearestCells(q: CoarseQuantizer, v: Array[Float],
+      n: Int): Seq[(Int, Option[Double])] =
+    if (v == null) q.cells.take(n).toSeq.map(_ -> None)
+    else q.nearest(v, n).toSeq.map { case (c, s) => c -> Some(s) }
+
+  /** The (vec_id, cell, cos_c) assignment of `e` to its nearest
+    * centroid, cos_c the winning score: one narrow map. */
+  private[graft] def kmeansAssign(e: DataFrame,
+      q: CoarseQuantizer): DataFrame = {
+    import e.sparkSession.implicits._
+    e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .flatMap { case (id, v) =>
+        nearestCells(q, v, 1).map { case (c, s) => (id, c, s) }
+      }
+      .toDF("vec_id", "cell", "cos_c")
   }
 
   /** Final (vec_id, cell) assignment of [[embeddingCosine]]'s k-means —
@@ -478,10 +465,8 @@ object Dedup {
     * shared stage like [[kmeansEC]]. */
   private[graft] val embeddingCells = graft.SessionMemo(
       "stage_kmeans_cells", graft.SessionMemo.dirStamp) { (spark, dir) =>
-    val (e, cents) = kmeansEC(spark, dir)
-    ecAssign(e, cents)
-      .select(col("vec_id"), col("cell"), col("cos_c"))
-      .cutLineage()
+    val (e, q) = kmeansEC(spark, dir)
+    kmeansAssign(e, q).cutLineage()
   }
 
   def embeddingCosine(spark: SparkSession, dir: String): DataFrame = {
@@ -531,27 +516,23 @@ object Dedup {
     * O(N²)): the quality gate for the k-means that q37/q288/q324's
     * whole dedup family stands on. Distances are cosine (1 − cos, the
     * metric the assignment itself optimizes). The top-2 centroids per
-    * vector come from the SAME broadcast-scored k·N relation the argmax
-    * assignment reads ([[ecScored]]) — one row_number window keyed on
-    * vec_id (the audit's one shuffle; at 100 TB the dense k-scan is
-    * replaced by the q289 IVF probe and the window runs over the ≤
-    * probe-width candidate list, partition-local). Per-vector s =
-    * (b−a)/max(a,b) is quantized to ppm FIRST (floor(·10⁶ + 0.5) on a
-    * non-negative value — b ≥ a by argmax construction, so the centroid
-    * variant's s is structurally ≥ 0), making the per-cell mean an
-    * order-free integer sum + one integral division. */
+    * vector come from the SAME nearest-centroid rule the assignment
+    * uses ([[graft.functions.CoarseQuantizer.nearest]]), in one narrow
+    * map (at 100 TB the dense k-scan is replaced by the q289 IVF
+    * probe). Per-vector s = (b−a)/max(a,b) is quantized to ppm FIRST
+    * (floor(·10⁶ + 0.5) on a non-negative value — b ≥ a by argmax
+    * construction, so the centroid variant's s is structurally ≥ 0),
+    * making the per-cell mean an order-free integer sum + one integral
+    * division. */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
-    val (e, cents) = kmeansEC(spark, dir)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("score").desc, col("cell").asc)
-    ecScored(e, cents)
-      .select(col("vec_id"), col("cell"), col("score"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 2)
-      .groupBy(col("vec_id"))
-      .agg(max(when(col("rn") === 1, col("cell"))).as("cell"),
-        max(when(col("rn") === 1, col("score"))).as("s1"),
-        max(when(col("rn") === 2, col("score"))).as("s2"))
+    import spark.implicits._
+    val (e, q) = kmeansEC(spark, dir)
+    e.select(col("embedding")).as[Array[Float]]
+      .flatMap { v =>
+        val cs = nearestCells(q, v, 2)
+        cs.headOption.map { case (c, s1) => (c, s1, cs.lift(1).flatMap(_._2)) }
+      }
+      .toDF("cell", "s1", "s2")
       .select(col("cell"),
         expr("CASE WHEN 1.0 - s2 <= 0.0 THEN CAST(0 AS BIGINT) " +
           "ELSE CAST(floor((s1 - s2) / (1.0 - s2) * 1000000 + 0.5) " +
@@ -611,13 +592,13 @@ object Dedup {
     def dotDD(a: Column, b: Column): Column =
       aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0),
         (acc, x) => acc + x)
-    val (_, cents0) = kmeansEC(spark, dir)
-    val cents = cents0
-      .withColumn("cn", VectorOps.l2NormDouble(col("c")))
-      .cutLineage() // k rows; feeds both pair sides
+    import spark.implicits._
+    val (_, q) = kmeansEC(spark, dir)
+    val cents = q.cells.indices // k rows; feed both pair sides
+      .map(i => (q.cells(i), q.cents(i), q.norms(i))).toDF("cell", "c", "cn")
     // scatter needs only (cell, cos_c) — read the memoized/checkpointed
     // assignment (priced once as stage_kmeans_cells) instead of
-    // re-running the k·N ecAssign scoring pass
+    // re-running the assignment
     val s = embeddingCells(spark, dir)
       .select(col("cell"),
         expr("CAST(floor((1.0 - cos_c) * 1000000 + 0.5) AS BIGINT)")

@@ -308,8 +308,8 @@ object Layout {
 
   /** Stage a Hive-layout partitioned copy of orders (dirs `yr=1995/…`)
     * plus a tiny (yr, era) dimension parquet — one per (JVM, dir), the
-    * q138/q142 staging discipline ([[Relational.stagedDir]]: fresh every
-    * JVM, so no staleness memo needed, and removed at exit). */
+    * q138/q142 staging discipline ([[Relational.stagedDir]]: staged
+    * again when the sf dir's stamp changes, removed at exit). */
   private[graft] def dppStage(spark: SparkSession, dir: String): String =
     Relational.stagedDir("dpp", dir) { b =>
       val o = t(spark, dir, "orders")

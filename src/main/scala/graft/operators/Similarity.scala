@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
   LongType, StructType}
 import graft.Ckpt.CutOps
 import graft.Q
-import graft.functions.{CentroidAggregator, DotFold, VectorOps}
+import graft.functions.{CoarseQuantizer, DotFold, VectorOps}
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -82,50 +82,38 @@ object Similarity {
       .select(col("q_id"), col("cand_id"), col("cos"), col("rn"))
   }
 
-  /** IVF-style ANN: coarse quantization by per-label centroid (computed
-    * with the typed [[graft.functions.CentroidAggregator]]), probe = the
-    * nearest centroid, fine search only within that cell. The scale shape
-    * of FAISS-IVF: centroid table is tiny (broadcast), assignment is one
-    * narrow pass, fine search touches ~N/cells candidates per query.
+  /** IVF-style ANN: coarse quantization by per-label centroid (the
+    * typed [[graft.functions.CentroidAggregator]] mean, collected into a
+    * [[graft.functions.CoarseQuantizer]]), probe = the nearest centroid,
+    * fine search only within that cell. The scale shape of FAISS-IVF:
+    * the quantizer is tiny (on the driver), assignment is one narrow
+    * pass, fine search touches ~N/cells candidates per query.
     *
     * Fully oracle-checked (was rows-only through r4): centroids are the
     * means of INTEGER-QUANTIZED vectors (`floor(1000·x + 0.5)` longs), so
     * per-dimension sums are exact and the centroid doubles bit-identical
     * in any engine — the same grid trick as q37's
     * [[graft.operators.Dedup.embeddingCells]]. Probe scores divide
-    * bit-identical doubles, ties break on lowest cell; the fine-search
+    * bit-identical doubles, ties break on lowest cell
+    * ([[graft.functions.CoarseQuantizer.nearest]]); the fine-search
     * cosine is the q38-proven widened-float form. */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = quantized(t(spark, dir, "embeddings"))
-    // cell index: label -> exact-grid centroid (typed aggregation,
-    // partial-agg merge: one (dim+1)-long buffer per cell on the shuffle)
-    val centroids = e.select(col("label"), col("qv"))
-      .as[(Int, Array[Long])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(CentroidAggregator.toColumn)
-      .toDF("cell", "c")
-    // probe: assign each query to its nearest centroid. Broadcast join on
-    // a column-derived constant key (see embeddingCells: a literal key
-    // would constant-fold into a nested-loop cross join); the argmax is
-    // max_by over (score, -cell) — MERGEABLE, so the k scored rows per
-    // query collapse map-side.
+    val quantizer = labelQuantizer(e)
+    // probe: each query's nearest centroid; a null vector scores null
+    // against every centroid, which Spark orders lowest, so it takes the
+    // lowest cell
     val assigned = e.filter(col("vec_id") < 50)
-      .select(col("vec_id"), col("embedding"),
-        VectorOps.l2Norm(col("embedding")).as("nrm"))
-      .withColumn("jk", col("vec_id") * 0)
-      .join(broadcast(centroids
-        .withColumn("cnorm", VectorOps.l2NormDouble(col("c")))
-        .withColumn("jk", col("cell").cast("long") * 0)), Seq("jk"))
-      .withColumn("score",
-        VectorOps.dotFloatDouble(col("embedding"), col("c")) /
-          (col("nrm") * col("cnorm")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cell"),
-        struct(col("score"), (-col("cell")).as("nc"))).as("cell"),
-        first(col("embedding")).as("qe"), first(col("nrm")).as("qn"))
-      .select(col("vec_id").as("q_id"), col("qe"), col("qn"), col("cell"))
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .flatMap { case (id, v) =>
+        (if (v == null) quantizer.cells.headOption
+        else quantizer.nearest(v, 1).headOption.map(_._1))
+          .map(cell => (id, v, cell))
+      }
+      .toDF("q_id", "qe", "cell")
+      .withColumn("qn", VectorOps.l2Norm(col("qe")))
     // fine search within the probed cell only
     val cands = e.select(col("vec_id").as("cand_id"),
       col("embedding").as("ce"),
@@ -161,50 +149,19 @@ object Similarity {
     * over just those 10 raw vectors emits the final top-3: the standard
     * coarse-search/rerank split of FAISS-style serving.
     *
-    * Scale shape: codebooks are tiny (M·cells·subdim doubles, on the
-    * driver); encode and reconstruction are narrow maps; ADC is O(Q·N)
-    * over M-byte codes — deliberately FLAT here (the exhaustive-PQ tier);
-    * [[annIvfPq]] (q245) is the composed serving plan that probes q48's
-    * cells first and cuts the ADC to nprobe/cells of N; the rerank
-    * fetches raw vectors for only Q·10 candidates via an equi-join.
+    * This is the serving kernel [[ivfpqSearch]] probing EVERY cell: the
+    * exhaustive-PQ tier, ADC over all N M-byte codes (Q·N), where
+    * [[annIvfPq]] (q245) probes 2 cells and cuts the ADC to 2/cells of
+    * N. The kernel's global ADC top-10 is exact, so it is the flat one.
     * Every double is a sequential fold over exact operands, so ADC
     * ranks — and therefore the candidate CUT — are bit-identical to the
-    * oracle's. */
+    * oracle's. A query without a vector is skipped
+    * ([[ivfpqQueries]]). */
   def annPq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = quantized(t(spark, dir, "embeddings"))
-    val (_, codebook, codes) = ivfpqTrainRelationsFrom(spark, e)
-    val recon = codes.as[(Long, Array[Int], Int)]
-      .map { case (id, cs, _) =>
-        val r = codebook.decode(cs)
-        (id, r, norm(r))
-      }
-      .toDF("cand_id", "rvec", "rn2")
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        VectorOps.l2Norm(col("embedding")).as("qn"))
-    val wAdc = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").desc, col("cand_id").asc)
-    val top = q.join(recon, col("q_id") =!= col("cand_id"))
-      .withColumn("adc",
-        VectorOps.dotFloatDouble(col("qe"), col("rvec")) /
-          (col("qn") * col("rn2")))
-      .withColumn("rna", row_number().over(wAdc))
-      .filter(col("rna") <= 10)
-      .select(col("q_id"), col("qe"), col("qn"), col("cand_id"))
-    val cands = e.select(col("vec_id").as("cand_id"),
-      col("embedding").as("ce"),
-      VectorOps.l2Norm(col("embedding")).as("cn"))
-    val wCos = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    top.join(cands, Seq("cand_id"))
-      // + 0.0 canonicalizes IEEE signed zero (see Analytics.statsProfile)
-      .withColumn("cos", round(VectorOps.cosinePrenormed(
-        VectorOps.dot(col("qe"), col("ce")), col("qn"), col("cn")), 6) +
-        lit(0.0))
-      .withColumn("rn", row_number().over(wCos))
-      .filter(col("rn") <= 3)
-      .select(col("q_id"), col("cand_id"), col("cos"), col("rn"))
+    val (quantizer, codebook, codes) = ivfpqTrainRelations(spark, dir)
+    ivfpqSearch(spark, ivfpqBlocks(spark, dir, quantizer, codebook, codes,
+      graft.Ckpt.scaleParts(spark, dir)), ivfpqQueries(spark, dir),
+      nprobe = quantizer.cells.length)
   }
 
   /** IVF×PQ composed ANN — the production FAISS-style serving plan
@@ -232,8 +189,8 @@ object Similarity {
     * transient index is built per call; q289 serves the same kernel
     * from a resident one. */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val (centroids, codebook, codes) = ivfpqTrainRelations(spark, dir)
-    ivfpqSearch(spark, ivfpqBlocks(spark, dir, centroids, codebook, codes,
+    val (quantizer, codebook, codes) = ivfpqTrainRelations(spark, dir)
+    ivfpqSearch(spark, ivfpqBlocks(spark, dir, quantizer, codebook, codes,
       graft.Ckpt.scaleParts(spark, dir)), ivfpqQueries(spark, dir))
   }
 
@@ -245,7 +202,7 @@ object Similarity {
 
   /** TRAIN half of the IVF-PQ index — everything [[ivfpqPersist]] needs
     * to write and a fresh JVM needs to serve: the coarse quantizer
-    * (q48's exact-grid label centroids, a local relation of (cell, c)),
+    * (q48's exact-grid label centroids, on the driver),
     * the M=4 sub-codebooks (q201's slice-of-the-mean, on the driver),
     * and the PER-CANDIDATE index entry (cand_id, codes array ordered by
     * subspace, cell — the packed-code row a production FAISS index
@@ -254,39 +211,42 @@ object Similarity {
     * retraining (the q289 gate proves it against the
     * retrain-from-scratch oracle). */
   private[graft] def ivfpqTrainRelations(spark: SparkSession,
-      dir: String): (DataFrame, Codebook, DataFrame) =
+      dir: String): (CoarseQuantizer, Codebook, DataFrame) =
     ivfpqTrainRelationsFrom(spark, quantized(t(spark, dir, "embeddings")))
 
   /** Same, over an explicit (vec_id, label, embedding, qv) slice —
     * [[annIvfPqAppend]] freezes the quantizer on yesterday's slice. The
-    * centroid aggregate runs once and is collected (cells·d doubles,
-    * as the serving probe collects them); the codes are a narrow pass
-    * over the slice ([[pqCodes]]). */
+    * centroid aggregate runs once and is collected (cells·d doubles);
+    * the codes are a narrow pass over the slice ([[pqCodes]]). */
   private def ivfpqTrainRelationsFrom(spark: SparkSession,
-      e: DataFrame): (DataFrame, Codebook, DataFrame) = {
-    import spark.implicits._
-    val cents = e.select(col("label"), col("qv"))
-      .as[(Int, Array[Long])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(CentroidAggregator.toColumn)
-      .collect().sortBy(_._1)
-    val codebook = Codebook.sliced(cents)
-    (cents.toSeq.toDF("cell", "c"), codebook, pqCodes(spark, e, codebook))
+      e: DataFrame): (CoarseQuantizer, Codebook, DataFrame) = {
+    val quantizer = labelQuantizer(e)
+    val codebook = Codebook.sliced(quantizer)
+    (quantizer, codebook, pqCodes(spark, e, codebook))
   }
 
-  /** The index entries (cand_id, codes, cell) of a (vec_id, label, qv)
-    * slice, the label as the cell: one narrow map that encodes each
-    * row against `codebook` ([[Codebook.encode]]). A row without a
-    * vector, or an empty codebook, yields no entry. */
-  private def pqCodes(spark: SparkSession, e: DataFrame,
-      codebook: Codebook): DataFrame = {
+  /** The coarse quantizer of a (label, qv) slice: the label's exact-grid
+    * centroid is its cell's. */
+  private def labelQuantizer(e: DataFrame): CoarseQuantizer = {
+    import e.sparkSession.implicits._
+    CoarseQuantizer.fit(e.select(col("label"), col("qv"))
+      .as[(Int, Array[Long])])
+  }
+
+  /** The index entries (cand_id, codes, cell) of a (vec_id, label,
+    * embedding, qv) slice: one narrow map that encodes each row against
+    * `codebook` ([[Codebook.encode]]) and takes its label as the cell,
+    * or, given a `frozen` quantizer, the nearest of its cells. A row
+    * without a vector, or an empty codebook, yields no entry. */
+  private def pqCodes(spark: SparkSession, e: DataFrame, codebook: Codebook,
+      frozen: Option[CoarseQuantizer] = None): DataFrame = {
     import spark.implicits._
-    e.select(col("vec_id"), col("qv"), col("label"))
-      .as[(Long, Array[Long], Int)]
-      .flatMap { case (id, qv, cell) =>
+    e.select(col("vec_id"), col("qv"), col("label"), col("embedding"))
+      .as[(Long, Array[Long], Int, Array[Float])]
+      .flatMap { case (id, qv, label, v) =>
         if (qv == null || codebook.codes.isEmpty) None
-        else Some(Row(id, codebook.encode(qv), cell))
+        else Some(Row(id, codebook.encode(qv),
+          frozen.fold(label)(_.nearest(v, 1).head._1)))
       }(Encoders.row(codesSchema))
   }
 
@@ -360,11 +320,11 @@ object Similarity {
   }
 
   private[graft] object Codebook {
-    /** Trained from the cells' centroids, by ascending cell: codeword
-      * (m, cell) is slice m of the cell's centroid. */
-    def sliced(cents: Array[(Int, Array[Double])]): Codebook =
-      new Codebook(cents.map(_._1), Array.tabulate(pqM)(m =>
-        cents.map(_._2.slice(m * pqSub, (m + 1) * pqSub))))
+    /** Trained from the coarse quantizer's centroids, by ascending cell:
+      * codeword (m, cell) is slice m of the cell's centroid. */
+    def sliced(q: CoarseQuantizer): Codebook =
+      new Codebook(q.cells, Array.tabulate(pqM)(m =>
+        q.cents.map(_.slice(m * pqSub, (m + 1) * pqSub))))
 
     /** Collected from a `codebook` table ([[Codebook.table]]). */
     def of(table: DataFrame): Codebook = {
@@ -377,11 +337,9 @@ object Similarity {
   }
 
   /** An IVF-PQ index in serving form: the coarse quantizer on the
-    * driver (by ascending cell: centroid vectors and their
-    * `l2NormDouble` norms) and the candidates as one [[CellBlock]] per
-    * cell, hash-partitioned by cell with `parts`. */
-  private[graft] final case class IvfpqBlocks(cells: Array[Int],
-      cents: Array[Array[Double]], cnorms: Array[Double],
+    * driver and the candidates as one [[CellBlock]] per cell,
+    * hash-partitioned by cell with `parts`. */
+  private[graft] final case class IvfpqBlocks(quantizer: CoarseQuantizer,
       blocks: RDD[(Int, CellBlock)], parts: HashPartitioner)
 
   /** One IVF cell's candidates as flat primitive arrays, rows by
@@ -439,19 +397,17 @@ object Similarity {
       byCell.getPartition(key.asInstanceOf[(Int, Long)]._1)
   }
 
-  /** Serving form of the index relations (from memory for q245/q290,
-    * from the persisted copy for q289): collects the centroids and
-    * packs the candidates, joined to their raw vectors, into per-cell
-    * blocks without holding rows: each row goes to its cell's partition,
-    * the partition is sorted by (cell, cand_id), and it streams into its
-    * blocks ([[CellBlock.stream]]). The block RDD is lazy and not
+  /** Serving form of the index relations (from memory for q201, q245
+    * and q290, from the persisted copy for q289): packs the candidates,
+    * joined to their raw vectors, into per-cell blocks without holding
+    * rows: each row goes to its cell's partition, the partition is
+    * sorted by (cell, cand_id), and it streams into its blocks
+    * ([[CellBlock.stream]]). The block RDD is lazy and not
     * cached. */
   private[graft] def ivfpqBlocks(spark: SparkSession, dir: String,
-      centroids: DataFrame, codebook: Codebook, codes: DataFrame,
+      quantizer: CoarseQuantizer, codebook: Codebook, codes: DataFrame,
       parts: Int): IvfpqBlocks = {
     import spark.implicits._
-    val cs = centroids.select(col("cell"), col("c"))
-      .as[(Int, Array[Double])].collect().sortBy(_._1)
     val byCell = new HashPartitioner(parts)
     val blocks = codes
       .join(t(spark, dir, "embeddings").select(col("vec_id").as("cand_id"),
@@ -461,8 +417,7 @@ object Similarity {
       .map { case (cell, id, c, v) => ((cell, id), (c, v)) }
       .repartitionAndSortWithinPartitions(new CellPartitioner(byCell))
       .mapPartitions(CellBlock.stream(codebook))
-    IvfpqBlocks(cs.map(_._1), cs.map(_._2), cs.map(c => norm(c._2)),
-      blocks, byCell)
+    IvfpqBlocks(quantizer, blocks, byCell)
   }
 
   /** A query of one request with its probed cells. */
@@ -474,7 +429,6 @@ object Similarity {
   private final case class Hit(q: Int, cand: Long, adc: Double,
       cos: Double)
 
-  private val nprobe = 2
   private val adcDepth = 10
 
   /** Ranking of the serving plan: score descending under Spark's double
@@ -508,8 +462,9 @@ object Similarity {
   /** SERVE half over caller-supplied queries: coarse probe →
     * cell-confined ADC → exact rerank, as one Spark job that runs
     * [[adcRerank]] over only the partitions holding a probed cell. The
-    * probe (top-nprobe cells per query by cosine to the centroid, ties
-    * on the lower cell) and the merge run on the driver:
+    * probe (the quantizer's `nprobe` nearest cells per query,
+    * [[graft.functions.CoarseQuantizer.nearest]]) and the merge run on
+    * the driver:
     * the global ADC top-10 of a query is drawn from the partitions'
     * top-10s, which is exact because each member of it is also in its
     * own partition's top-10; those 10 are cut to the top-k by exact
@@ -518,15 +473,11 @@ object Similarity {
     * a local relation of (q_id, cand_id, cos, rn) rows, computed by the
     * time this returns. */
   private[graft] def ivfpqSearch(spark: SparkSession, idx: IvfpqBlocks,
-      queries: Array[(Long, Array[Float])], k: Int = 3): DataFrame = {
+      queries: Array[(Long, Array[Float])], k: Int = 3,
+      nprobe: Int = 2): DataFrame = {
     val probes = queries.map { case (qId, v) =>
-      val norm = math.sqrt(DotFold.floatFloat(v, 0, v, 0, v.length))
-      val cells = idx.cells.indices.map { c =>
-        (DotFold.floatDouble(v, 0, idx.cents(c), 0,
-          math.min(v.length, idx.cents(c).length)) /
-          (norm * idx.cnorms(c)), idx.cells(c))
-      }.sortWith { case ((s1, c1), (s2, c2)) => rank(s1, c1, s2, c2) < 0 }
-      Probe(qId, v, norm, cells.take(nprobe).map(_._2).toArray)
+      Probe(qId, v, math.sqrt(DotFold.floatFloat(v, 0, v, 0, v.length)),
+        idx.quantizer.nearest(v, nprobe).map(_._1))
     }
     val parts = probes.flatMap(_.cells).map(idx.parts.getPartition)
       .distinct.sorted.toSeq
@@ -616,8 +567,8 @@ object Similarity {
   def ivfpqPersist(spark: SparkSession, dir: String,
       indexDir: String): Unit = {
     import java.nio.file.{Files, Paths}
-    val (centroids, codebook, codes) = ivfpqTrainRelations(spark, dir)
-    centroids.coalesce(1).write.mode("overwrite")
+    val (quantizer, codebook, codes) = ivfpqTrainRelations(spark, dir)
+    quantizer.table(spark).coalesce(1).write.mode("overwrite")
       .parquet(s"$indexDir/centroids")
     codebook.table(spark).coalesce(1).write.mode("overwrite")
       .parquet(s"$indexDir/codebook")
@@ -684,10 +635,10 @@ object Similarity {
     withIvfpqLease(spark, dir, indexDir)(r =>
       ivfpqSearch(spark, r.index, r.queries))
 
-  /** A persisted index held in memory for serving: the centroids and the
-    * Q query vectors ([[ivfpqQueries]]) on the driver and the per-cell
-    * blocks, N·d doubles of reconstruction plus N·d floats of raw
-    * vectors, as a lineage cut (a lost block fails the request instead
+  /** A persisted index held in memory for serving: the coarse quantizer
+    * and the Q query vectors ([[ivfpqQueries]]) on the driver and the
+    * per-cell blocks, N·d doubles of reconstruction plus N·d floats of
+    * raw vectors, as a lineage cut (a lost block fails the request instead
     * of recomputing from files rewritten since). `version` is the index
     * directory's file stamp plus the source fingerprint: the raw and
     * query vectors are resident too.
@@ -754,7 +705,7 @@ object Similarity {
         else {
           residentLoads.incrementAndGet()
           val idx = ivfpqBlocks(spark, dir,
-            spark.read.parquet(s"$indexDir/centroids"),
+            CoarseQuantizer.of(spark.read.parquet(s"$indexDir/centroids")),
             Codebook.of(spark.read.parquet(s"$indexDir/codebook")),
             spark.read.parquet(s"$indexDir/codes"),
             graft.Ckpt.scaleParts(spark, indexDir))
@@ -805,43 +756,32 @@ object Similarity {
     * bit-identical doubles, ties → lowest cell), codes = argmin L2² to
     * the frozen sub-codebooks — and their code rows are unioned onto
     * the base index. NO retrain, NO shuffle of the base index: the
-    * appended batch is one narrow pass against the broadcast frozen
-    * quantizer, which is why ingest cost at 100 TB scales with the
-    * DELTA, not the corpus. Serving (probe → cell-confined ADC → exact
-    * rerank) runs over the combined code table, unchanged. The oracle
+    * appended batch is one narrow pass against the frozen quantizer
+    * shipped from the driver, which is why ingest cost at 100 TB scales
+    * with the DELTA, not the corpus. Serving (probe → cell-confined
+    * ADC → exact rerank) runs over the combined code table, unchanged. The oracle
     * recomputes the whole freeze-then-assign protocol from scratch, so
     * the gate proves the incremental path equals the protocol — the
     * same serve==retrain argument as q289, one step further. */
   def annIvfPqAppend(spark: SparkSession, dir: String): DataFrame = {
-    val eAll = quantized(t(spark, dir, "embeddings"))
-    val cut = eAll.agg(expr("4 * count(1) div 5").as("b"))
-    val base = eAll.crossJoin(broadcast(cut))
-      .filter(col("vec_id") < col("b")).drop("b")
-    val delta = eAll.crossJoin(broadcast(cut))
-      .filter(col("vec_id") >= col("b")).drop("b")
-    val (centroids, codebook, baseCodes) =
-      ivfpqTrainRelationsFrom(spark, base)
-    // delta coarse assignment: nearest FROZEN centroid (q48 probe rule)
-    val deltaCells = delta
-      .select(col("vec_id").as("cand_id"), col("embedding"),
-        VectorOps.l2Norm(col("embedding")).as("nrm"))
-      .withColumn("jk", col("cand_id") * 0)
-      .join(broadcast(centroids
-        .withColumn("cnorm", VectorOps.l2NormDouble(col("c")))
-        .withColumn("jk", col("cell").cast("long") * 0)), Seq("jk"))
-      .withColumn("score",
-        VectorOps.dotFloatDouble(col("embedding"), col("c")) /
-          (col("nrm") * col("cnorm")))
-      .groupBy(col("cand_id"))
-      .agg(max_by(col("cell"),
-        struct(col("score"), (-col("cell")).as("nc"))).as("cell"))
-    // delta fine assignment: the same encode against the FROZEN
-    // sub-codebooks
-    val deltaCodes = pqCodes(spark, delta, codebook).drop("cell")
-      .join(deltaCells, Seq("cand_id"))
-    val codes = baseCodes.unionByName(deltaCodes)
-    ivfpqSearch(spark, ivfpqBlocks(spark, dir, centroids, codebook, codes,
+    val (quantizer, codebook, codes) = ivfpqAppendRelations(spark, dir)
+    ivfpqSearch(spark, ivfpqBlocks(spark, dir, quantizer, codebook, codes,
       graft.Ckpt.scaleParts(spark, dir)), ivfpqQueries(spark, dir))
+  }
+
+  /** q290's index relations: the quantizer and codebook trained on the
+    * base slice, and the base codes unioned with the delta's, which one
+    * narrow map encodes against the frozen codebook and assigns to the
+    * nearest frozen cell ([[pqCodes]]). */
+  private[graft] def ivfpqAppendRelations(spark: SparkSession,
+      dir: String): (CoarseQuantizer, Codebook, DataFrame) = {
+    val eAll = quantized(t(spark, dir, "embeddings"))
+    val cut = 4 * eAll.count() / 5
+    val (quantizer, codebook, baseCodes) =
+      ivfpqTrainRelationsFrom(spark, eAll.filter(col("vec_id") < cut))
+    val deltaCodes = pqCodes(spark, eAll.filter(col("vec_id") >= cut),
+      codebook, Some(quantizer))
+    (quantizer, codebook, baseCodes.unionByName(deltaCodes))
   }
 
   /** Int8 scalar quantization of the embedding column — the storage/ANN

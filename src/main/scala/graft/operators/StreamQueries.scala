@@ -39,8 +39,6 @@ object StreamQueries {
     * same length would otherwise hit a stale entry. */
   private[graft] val rawSchemaOf = graft.SessionMemo("stream_schema",
     fileStamp)(EventStreams.eventSchemaFor)
-  private val srcDirCache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.nio.file.Path]()
   private[graft] def fileStamp(path: String): String = {
     val f = new java.io.File(path)
     val parts =
@@ -90,8 +88,8 @@ object StreamQueries {
     // single-table dir via symlink — the exact layout a production feed
     // (object-store prefix receiving files) would have.
     import java.nio.file._
-    // Staging + checkpoint are ONE-SHOT (checkpoint deleted below), so
-    // they go on tmpfs when available: the state store and commit log
+    // The checkpoint is ONE-SHOT (deleted below), so it goes on tmpfs
+    // when available: the state store and commit log
     // write many small files per micro-batch. (Measured: at this feed
     // volume the move alone was inside noise — the category's floor is
     // micro-batch planning, see the no-data note below — but it removes
@@ -99,20 +97,12 @@ object StreamQueries {
     // from touching the root volume.) A production deployment keeps
     // checkpoints on durable storage — this is the bounded-replay
     // harness, where the checkpoint dies with the run.
-    val tmpBase = {
-      val shm = Paths.get("/dev/shm")
-      if (Files.isDirectory(shm) && Files.isWritable(shm)) Some(shm)
-      else None
-    }
-    def mkTmp(prefix: String): Path = tmpBase match {
-      case Some(b) => Files.createTempDirectory(b, prefix)
-      case None => Files.createTempDirectory(prefix)
-    }
-    // One staged dir per source feed per JVM (content is a static
-    // symlink — every query of the category streams the same file, so
-    // the dir is shareable and the schema memo above can actually hit)
-    val srcDir = srcDirCache.computeIfAbsent(dir, { _ =>
-      val d = mkTmp("graft_stream_src")
+    // One staged dir per source feed ([[Relational.stagedDir]]: content
+    // is a static symlink — every query of the category streams the same
+    // file, so the dir is shareable and the schema memo above can
+    // actually hit; a rewritten sf dir is staged again)
+    val srcDir = Relational.stagedDir("stream_src", dir) { b =>
+      val d = Paths.get(b)
       val tgt = Paths.get(dir, "events.parquet")
       if (Files.isDirectory(tgt)) {
         // Spark-written feed: events.parquet is a DIRECTORY of part
@@ -132,13 +122,17 @@ object StreamQueries {
           }.foreach(p =>
             Files.createSymbolicLink(d.resolve(p.getFileName), p))
       } else Files.createSymbolicLink(d.resolve("events.parquet"), tgt)
-      d
-    })
+    }
     val ev = graft.sources.Tables.normalizeTs(
-      spark.readStream.schema(rawSchemaOf(spark, srcDir.toString))
-        .parquet(srcDir.toString))
+      spark.readStream.schema(rawSchemaOf(spark, srcDir))
+        .parquet(srcDir))
     val name = s"graft_stream_${ctr.incrementAndGet()}"
-    val ckpt = mkTmp("graft_stream_ckpt")
+    val ckpt = {
+      val shm = Paths.get("/dev/shm")
+      if (Files.isDirectory(shm) && Files.isWritable(shm))
+        Files.createTempDirectory(shm, "graft_stream_ckpt")
+      else Files.createTempDirectory("graft_stream_ckpt")
+    }
     // Stateful operators allocate one state-store instance PER shuffle
     // partition per operator — at this feed volume 32 partitions is pure
     // store-init/commit overhead (a stream-stream join runs 4 stores per
@@ -197,13 +191,8 @@ object StreamQueries {
     }
     // The memory sink holds the results; the checkpoint dir is one-shot
     // — drop it so bench/verify iterations don't accumulate. The staged
-    // src dir is the shared per-JVM symlink above and stays.
-    def rmTree(p: Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-    }
-    rmTree(ckpt)
+    // src dir is the shared symlink dir above and stays.
+    Relational.deleteTree(ckpt.toString)
     spark.table(name)
   }
 

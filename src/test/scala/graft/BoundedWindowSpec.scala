@@ -72,7 +72,8 @@ class BoundedWindowSpec extends SparkSpec {
         }
       }
     }
-    // the enumeration itself is the audit artifact (PLANS.md cites it)
+    // the enumeration itself is the audit artifact (cited by
+    // plans/bounded_windows.md)
     info(s"${rows.length} unpartitioned window sites across " +
       s"${rows.map(_._1).distinct.length} queries")
     rows.foreach { case (n, i, a, b) => info(f"$n%-28s site $i: $a%6d -> $b%6d") }

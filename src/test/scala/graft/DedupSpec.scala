@@ -880,7 +880,7 @@ class DedupSpec extends SparkSpec {
   test("silhouette: per-cell means equal a driver recompute of the " +
       "top-2 centroid scores; values sit in the unit band") {
     val (e, cents) = Dedup.kmeansEC(spark, sf)
-    val cs = cents.collect().map(r => (r.getInt(0),
+    val cs = cents.table(spark).collect().map(r => (r.getInt(0),
       r.getSeq[Double](1).toArray)).sortBy(_._1)
     val cn = cs.map { case (_, c) =>
       math.sqrt(c.foldLeft(0.0)((acc, x) => acc + x * x)) }
@@ -916,7 +916,7 @@ class DedupSpec extends SparkSpec {
   test("davies-bouldin: scatter, separation and the worst neighbor " +
       "equal a driver recompute over the bounded centroid pairs") {
     val (_, cents) = Dedup.kmeansEC(spark, sf)
-    val cs = cents.collect().map(r => (r.getInt(0),
+    val cs = cents.table(spark).collect().map(r => (r.getInt(0),
       r.getSeq[Double](1).toArray)).sortBy(_._1)
     val cn = cs.map { case (cell, c) => cell ->
       math.sqrt(c.foldLeft(0.0)((acc, x) => acc + x * x)) }.toMap

@@ -452,7 +452,7 @@ class IndexServeSpec extends SparkSpec {
     Seq(sf, tieDir).foreach { dir =>
       val (rc, rb, rk) = referenceTrain(dir)
       val (c, b, k) = sim.ivfpqTrainRelations(spark, dir)
-      assert(rendered(c) === rendered(rc), s"centroids of $dir")
+      assert(rendered(c.table(spark)) === rendered(rc), s"centroids of $dir")
       assert(rendered(b.table(spark)) === rendered(rb), s"codebook of $dir")
       assert(rendered(k) === rendered(rk), s"codes of $dir")
       assert(rendered(k).nonEmpty)

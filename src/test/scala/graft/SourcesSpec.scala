@@ -228,6 +228,42 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
+  test("q138 follows orders.parquet rewritten in place: it restages, " +
+      "equals a fresh session over the rewritten table, and deletes the " +
+      "superseded copy") {
+    import graft.operators.Relational
+    import org.apache.spark.sql.DataFrame
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def ordersOnly(from: String): String = {
+      val d = tempDir("graft_restage")
+      Files.copy(java.nio.file.Paths.get(from, "orders.parquet"),
+        d.resolve("orders.parquet"))
+      d.toString
+    }
+    val dir = ordersOnly(sf)
+    val before = rows(Relational.schemaEvolution(spark, dir))
+    val staged = Relational.stagedDir("schema_evo", dir)(_ =>
+      fail("a second call restaged unchanged orders"))
+    // rewrite orders.parquet in place as one file: the 1998 orders only
+    val out = tempDir("graft_restage_w").resolve("o").toString
+    spark.read.parquet(s"$sf/orders.parquet")
+      .filter(year(col("o_orderdate")) === 1998)
+      .coalesce(1).write.parquet(out)
+    import scala.jdk.CollectionConverters._
+    val part = Files.list(java.nio.file.Paths.get(out)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq.head
+    Files.move(part, java.nio.file.Paths.get(dir, "orders.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val after = rows(Relational.schemaEvolution(spark, dir))
+    val fresh = rows(Relational.schemaEvolution(spark.newSession(),
+      ordersOnly(dir)))
+    assert(after === fresh)
+    assert(after !== before)
+    assert(!Files.exists(java.nio.file.Paths.get(staged)),
+      s"the superseded staged copy $staged is still there")
+  }
+
   test("avro roundtrip: all five supported types + nulls survive " +
       "write/read byte-exactly; one file per non-empty partition") {
     import spark.implicits._
