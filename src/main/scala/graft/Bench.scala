@@ -7,12 +7,8 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config(EngineDefaults.read)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // MICROS-no-UTC feed reads as LTZ at the scan itself (UTC session:
-      // bit-identical micros) so ts range predicates reach PushedFilters
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     EngineDefaults(spark)
@@ -178,8 +174,8 @@ object Bench {
       // r14: level-1 Louvain labels shared by the census and level 2
       "stage_louvain_l1" -> Set("q347_louvain_level",
         "q353_louvain_two_level"))
-    // building a shared stage materializes it; the resident index is
-    // the one stage that is not a SessionMemo
+    // building a shared stage materializes it; the resident index's
+    // hook also ensures the persisted index it loads
     def runStage(sname: String): Unit =
       if (sname == "stage_ivfpq_index")
         graft.operators.Similarity.materializeIvfpqIndex(spark, sfDir)

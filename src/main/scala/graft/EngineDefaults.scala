@@ -2,12 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Physical-plan defaults every engine entry point applies (r16
-  * optimization round). One place, so Bench (the timed surface), Verify
-  * (the correctness surface), PlanDump (the committed plan evidence) and
-  * the test session all run the SAME plan shapes — a strategy that only
-  * existed in the bench session would make the correctness gate and the
-  * committed plans evidence about a different engine.
+/** Read semantics and physical-plan defaults every engine entry point
+  * applies. One place, so Bench (the timed surface), Verify (the
+  * correctness surface), PlanDump (the committed plan evidence), the
+  * test session and the specs' forked mains all read the same values and
+  * run the SAME plan shapes — a strategy that only existed in the bench
+  * session would make the correctness gate and the committed plans
+  * evidence about a different engine.
+  *
+  * Read semantics: a UTC session; TIMESTAMP(NANOS) columns read as
+  * nanosecond longs; the MICROS-no-UTC feed read as LTZ at the scan
+  * itself (UTC session: bit-identical micros), so ts range predicates
+  * reach PushedFilters ([[graft.sources.Tables.normalizeTs]]). Entry
+  * points also pass them to their session builder, so every
+  * `newSession()` of the context (the scoped-conf queries) reads alike.
   *
   * `spark.sql.join.preferSortMergeJoin=false` — allow the planner to
   * choose shuffled-hash join when its own size conditions hold
@@ -26,10 +34,15 @@ import org.apache.spark.sql.SparkSession
   * adaptive.maxShuffledHashJoinLocalMapThreshold=64m (×1.09 median).
   */
 object EngineDefaults {
+  val read: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+
   val physical: Seq[(String, String)] = Seq(
     "spark.sql.join.preferSortMergeJoin" -> "false")
 
   /** Apply to a built session (all entries are runtime-settable). */
   def apply(spark: SparkSession): Unit =
-    physical.foreach { case (k, v) => spark.conf.set(k, v) }
+    (read ++ physical).foreach { case (k, v) => spark.conf.set(k, v) }
 }

@@ -13,14 +13,10 @@ object PlanDump {
     val outPath = if (args.length > 1) args(1) else "PLANS.md"
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // MICROS-no-UTC feed reads as LTZ at the scan itself (UTC session:
-      // bit-identical micros) so ts range predicates reach PushedFilters
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       // the dumps exist to SHOW scan metadata (PushedFilters etc.) —
       // don't let the 100-char default cut a filter list mid-entry
       .config("spark.sql.maxMetadataStringLength", "2000")
+      .config(EngineDefaults.read)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

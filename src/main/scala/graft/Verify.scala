@@ -13,11 +13,7 @@ object Verify {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // MICROS-no-UTC feed reads as LTZ at the scan itself (UTC session:
-      // bit-identical micros) so ts range predicates reach PushedFilters
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config(EngineDefaults.read)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -629,7 +629,7 @@ object Similarity {
     * missing index is the caller's bug and fails loudly. A request runs
     * only probe → ADC → rerank ([[ivfpqSearch]], one Spark job) against
     * the resident copy of the index and its query vectors, which it
-    * leases for its duration (see [[withIvfpqLease]]). */
+    * leases for its duration (see [[residentIvfpq]]). */
   def annIvfPqServeFrom(spark: SparkSession, dir: String,
       indexDir: String): DataFrame =
     withIvfpqLease(spark, dir, indexDir)(r =>
@@ -639,104 +639,40 @@ object Similarity {
     * and the Q query vectors ([[ivfpqQueries]]) on the driver and the
     * per-cell blocks, N·d doubles of reconstruction plus N·d floats of
     * raw vectors, as a lineage cut (a lost block fails the request instead
-    * of recomputing from files rewritten since). `version` is the index
-    * directory's file stamp plus the source fingerprint: the raw and
-    * query vectors are resident too.
-    *
-    * Reference counted: one reference is the cache's while the copy is
-    * current, one is each request's while it serves. The blocks are
-    * unpersisted when the last reference goes, so a request that
-    * started on a copy finishes on it even if a newer version has
-    * replaced it in the cache meanwhile. */
-  private[graft] final class ResidentIvfpq(val version: String,
-      val index: IvfpqBlocks, val queries: Array[(Long, Array[Float])]) {
-    private val refs = new java.util.concurrent.atomic.AtomicInteger(1)
-    def acquire(): ResidentIvfpq = { refs.incrementAndGet(); this }
-    def release(): Unit =
-      if (refs.decrementAndGet() == 0) index.blocks.unpersist(blocking = false)
-  }
+    * of recomputing from files rewritten since). */
+  private[graft] final case class ResidentIvfpq(index: IvfpqBlocks,
+      queries: Array[(Long, Array[Float])])
 
-  /** Resident indexes, one per (session, index dir): an entry serves
-    * while its version is current, and a re-persist — by
-    * [[ensureIvfpqIndex]] in this JVM or by any other process — or a
-    * rewrite of the source embeddings changes the version, so the next
-    * request loads a new copy and the superseded one is released once
-    * its last request ends. */
-  private val residentCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), ResidentIvfpq]()
-  private val residentLoads = new java.util.concurrent.atomic.AtomicLong()
+  /** Resident indexes, one per (session, source dir, absolute index
+    * dir). The stamp is the index directory's file stamp plus the source
+    * fingerprint, as the raw and query vectors are resident too: a
+    * re-persist — by [[ensureIvfpqIndex]] in this JVM or by any other
+    * process — or a rewrite of the source embeddings makes the next
+    * request load a new copy. Requests lease the copy they serve from,
+    * and a copy's blocks are unpersisted once it is superseded and its
+    * last request has ended. */
+  private[graft] val residentIvfpq =
+    graft.SessionMemo[(String, String), ResidentIvfpq]("resident_ivfpq",
+      { case (dir, indexDir) =>
+        Tables.fileStamp(java.nio.file.Paths.get(indexDir)) +
+          ivfpqFingerprint(dir) })(
+      { case (spark, (dir, indexDir)) =>
+        val idx = ivfpqBlocks(spark, dir,
+          CoarseQuantizer.of(spark.read.parquet(s"$indexDir/centroids")),
+          Codebook.of(spark.read.parquet(s"$indexDir/codebook")),
+          spark.read.parquet(s"$indexDir/codes"),
+          graft.Ckpt.scaleParts(spark, indexDir))
+        ResidentIvfpq(idx.copy(blocks = graft.Ckpt.cutRdd(spark, idx.blocks)),
+          ivfpqQueries(spark, dir))
+      },
+      _.index.blocks.unpersist(blocking = false))
 
-  /** Number of resident-index builds in this JVM (spec probe). */
-  private[graft] def residentIvfpqLoads: Long = residentLoads.get()
-
-  /** RDD ids of the cached blocks of the resident copy of `indexDir`
-    * (spec probe; empty if none is resident). */
-  private[graft] def residentIvfpqRddIds(spark: SparkSession,
-      indexDir: String): Seq[Int] =
-    Option(residentCache.get(residentKey(spark, indexDir)))
-      .toSeq.map(_.index.blocks.id)
-
-  private def residentKey(spark: SparkSession,
-      indexDir: String): (String, String) =
-    (graft.SessionMemo.session(spark),
-      java.nio.file.Paths.get(indexDir).toAbsolutePath.normalize.toString)
-
-  /** Runs `f` on the current resident copy of the index persisted at
-    * `indexDir` (loaded once per version), holding a reference to it
-    * until `f` returns. A load, the eviction of the superseded copy and
-    * the reference all happen under the entry's lock, with the version
-    * read again there, so concurrent first requests load once, a
-    * superseded copy is evicted exactly once, and no request can take
-    * a copy whose blocks are already released. */
+  /** Runs `f` on a lease of the resident copy of the index persisted at
+    * `indexDir` from `dir`'s embeddings. */
   private[graft] def withIvfpqLease[T](spark: SparkSession, dir: String,
-      indexDir: String)(f: ResidentIvfpq => T): T = {
-    val key = residentKey(spark, indexDir)
-    def stamp(): String =
-      Tables.fileStamp(java.nio.file.Paths.get(key._2)) + ivfpqFingerprint(dir)
-    // read outside the entry's lock, so concurrent requests do not queue
-    // behind each other's directory walks; a mismatch is read again
-    // under the lock, as `seen` may predate a copy installed meanwhile
-    val seen = stamp()
-    val r = residentCache.compute(key, { (_, old) =>
-      val version =
-        if (old != null && old.version == seen) seen else stamp()
-      val cur =
-        if (old != null && old.version == version) old
-        else {
-          residentLoads.incrementAndGet()
-          val idx = ivfpqBlocks(spark, dir,
-            CoarseQuantizer.of(spark.read.parquet(s"$indexDir/centroids")),
-            Codebook.of(spark.read.parquet(s"$indexDir/codebook")),
-            spark.read.parquet(s"$indexDir/codes"),
-            graft.Ckpt.scaleParts(spark, indexDir))
-          val loaded = new ResidentIvfpq(version,
-            idx.copy(blocks = graft.Ckpt.cutRdd(spark, idx.blocks)),
-            ivfpqQueries(spark, dir))
-          // only once the new copy stands: a failed load leaves the
-          // current entry, and its reference, as they were
-          if (old != null) old.release()
-          loaded
-        }
-      cur.acquire()
-    })
-    try f(r) finally r.release()
-  }
-
-  /** Drop every resident index; each copy's blocks go once its last
-    * request ends. */
-  private[graft] def clearResidentIvfpq(): Unit =
-    residentCache.keySet().forEach { k =>
-      Option(residentCache.remove(k)).foreach(_.release())
-    }
-
-  /** Forget the resident indexes of `sessions`, whose context has
-    * stopped: nothing is unpersisted on the stopped context. */
-  private[graft] def dropResidentIvfpq(sessions: String => Boolean): Unit =
-    residentCache.keySet().removeIf(k => sessions(k._1))
-
-  /** Number of resident indexes held for session `sid` (spec probe). */
-  private[graft] def residentIvfpqEntries(sid: String): Int =
-    residentCache.keySet().stream().filter(_._1 == sid).count().toInt
+      indexDir: String)(f: ResidentIvfpq => T): T =
+    residentIvfpq.lease(spark, (dir,
+      java.nio.file.Paths.get(indexDir).toAbsolutePath.normalize.toString))(f)
 
   /** Bench hook: make the resident index of `dir`'s canonical index
     * location ready OUTSIDE any query's timing, as a stage build does. */
@@ -915,7 +851,7 @@ object Similarity {
   private val pc1Core = graft.SessionMemo("stage_pc1",
     graft.SessionMemo.dirStamp)(pc1CoreBuild)
 
-  /** Clears every stage memo and the resident IVF-PQ indexes (the one
+  /** Clears every memo, the resident IVF-PQ indexes included (the one
     * between-pass reset Bench and the benchmark call). */
   private[graft] def clearPc1Cache(): Unit = graft.SessionMemo.clearAll()
 

@@ -191,9 +191,13 @@ object StreamQueries {
     }
     // The memory sink holds the results; the checkpoint dir is one-shot
     // — drop it so bench/verify iterations don't accumulate. The staged
-    // src dir is the shared symlink dir above and stays.
+    // src dir is the shared symlink dir above and stays. The returned
+    // frame is resolved, so the sink's temp view goes too: the rows live
+    // as long as the frame, not the session.
     Relational.deleteTree(ckpt.toString)
-    spark.table(name)
+    val out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    out
   }
 
   /** Stream-stream inner join executed as a stream: purchases within 30

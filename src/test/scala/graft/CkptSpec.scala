@@ -49,7 +49,7 @@ class CkptSpec extends SparkSpec {
     def rows(s: org.apache.spark.sql.SparkSession) =
       sim.annIvfPqServeFrom(s, sf, indexDir).collect().map(_.toSeq).toSet
     assert(rows(s2) === rows(spark))
-    val Seq(id) = sim.residentIvfpqRddIds(s2, indexDir)
+    val id = sim.withIvfpqLease(s2, sf, indexDir)(_.index.blocks.id)
     assert(spark.sparkContext.getPersistentRDDs(id).getCheckpointFile
       .isDefined, "resident blocks were not reliably checkpointed")
     sim.clearPc1Cache()

@@ -35,6 +35,12 @@ class IndexServeSpec extends SparkSpec {
   private def cached: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** The RDD id of the cached blocks of the resident copy of the index
+    * persisted at `indexDir` from `sf`, as a lease sees it. */
+  private def blockIds(indexDir: String): Seq[Int] =
+    Seq(operators.Similarity.withIvfpqLease(spark, sf, indexDir)(
+      _.index.blocks.id))
+
   test("serving from an index persisted by a DIFFERENT JVM equals the " +
       "in-memory retrain; no retrain while fresh; stale fingerprint " +
       "forces one") {
@@ -71,15 +77,15 @@ class IndexServeSpec extends SparkSpec {
   test("a second serve reuses the resident index: one load, same cuts") {
     val sim = operators.Similarity
     val indexDir = persisted()
-    val loads0 = sim.residentIvfpqLoads
+    val loads0 = sim.residentIvfpq.builds
     assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === retrained)
-    assert(sim.residentIvfpqLoads === loads0 + 1)
-    val ids = sim.residentIvfpqRddIds(spark, indexDir)
+    assert(sim.residentIvfpq.builds === loads0 + 1)
+    val ids = blockIds(indexDir)
     assert(ids.nonEmpty && ids.forall(cached))
     assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === retrained)
-    assert(sim.residentIvfpqLoads === loads0 + 1,
+    assert(sim.residentIvfpq.builds === loads0 + 1,
       "second request reloaded an unchanged index")
-    assert(sim.residentIvfpqRddIds(spark, indexDir) === ids)
+    assert(blockIds(indexDir) === ids)
   }
 
   test("a re-persist invalidates the resident copy and releases its " +
@@ -87,17 +93,17 @@ class IndexServeSpec extends SparkSpec {
     val sim = operators.Similarity
     val indexDir = persisted()
     assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === retrained)
-    val old = sim.residentIvfpqRddIds(spark, indexDir)
+    val old = blockIds(indexDir)
     assert(old.nonEmpty && old.forall(cached))
-    val loads0 = sim.residentIvfpqLoads
+    val loads0 = sim.residentIvfpq.builds
     Files.write(Paths.get(indexDir, "_fingerprint"),
       "stale".getBytes("UTF-8"))
     assert(sim.ensureIvfpqIndex(spark, sf, indexDir),
       "stale fingerprint did not force a retrain")
     assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === retrained)
-    assert(sim.residentIvfpqLoads === loads0 + 1,
+    assert(sim.residentIvfpq.builds === loads0 + 1,
       "serve after a re-persist did not reload the index")
-    val now = sim.residentIvfpqRddIds(spark, indexDir)
+    val now = blockIds(indexDir)
     assert(now.nonEmpty && now.forall(cached))
     assert(old.forall(id => !cached(id)),
       "superseded resident index still holds cached blocks")
@@ -108,7 +114,7 @@ class IndexServeSpec extends SparkSpec {
     import java.util.concurrent.{Callable, Executors}
     val sim = operators.Similarity
     val indexDir = persisted()
-    val loads0 = sim.residentIvfpqLoads
+    val loads0 = sim.residentIvfpq.builds
     val n = 4
     val pool = Executors.newFixedThreadPool(n)
     val start = new java.util.concurrent.CountDownLatch(1)
@@ -125,9 +131,9 @@ class IndexServeSpec extends SparkSpec {
       fs.map(_.get())
     } finally pool.shutdown()
     results.foreach(r => assert(r === retrained))
-    assert(sim.residentIvfpqLoads === loads0 + 1,
+    assert(sim.residentIvfpq.builds === loads0 + 1,
       s"$n concurrent first requests loaded the index " +
-        s"${sim.residentIvfpqLoads - loads0} times")
+        s"${sim.residentIvfpq.builds - loads0} times")
   }
 
   test("a request holding a superseded copy finishes on it; the copy's " +
@@ -141,7 +147,7 @@ class IndexServeSpec extends SparkSpec {
       assert(sim.ensureIvfpqIndex(spark, sf, indexDir))
       // a newer request loads the re-persisted copy and supersedes r
       assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === retrained)
-      assert(!sim.residentIvfpqRddIds(spark, indexDir).contains(id))
+      assert(!blockIds(indexDir).contains(id))
       assert(cached(id), "superseded copy released while a request held it")
       // the held request still serves from its own blocks (a lineage
       // cut: released blocks would fail it, not recompute)
@@ -163,7 +169,7 @@ class IndexServeSpec extends SparkSpec {
       val indexDir = persisted()
       assert(Ckpt.scaleParts(spark, indexDir) > 1)
       assert(key(sim.annIvfPqServeFrom(spark, sf, indexDir)) === expected)
-      val ids = sim.residentIvfpqRddIds(spark, indexDir)
+      val ids = blockIds(indexDir)
       assert(ids.map(spark.sparkContext.getPersistentRDDs(_)
         .getNumPartitions) === Seq(Ckpt.scaleParts(spark, indexDir)))
     } finally prev match {
@@ -250,16 +256,16 @@ class IndexServeSpec extends SparkSpec {
     }
     // the index files are unchanged, the source is not: reload, and
     // rerank against the rewritten raw vectors
-    val loads0 = sim.residentIvfpqLoads
+    val loads0 = sim.residentIvfpq.builds
     val mixed = key(sim.annIvfPqServeFrom(spark, dir, indexDir))
-    assert(sim.residentIvfpqLoads === loads0 + 1,
+    assert(sim.residentIvfpq.builds === loads0 + 1,
       "a source rewrite did not reload the resident copy")
     mixed.foreach { case (q, c, cos, _) =>
       assert(cos === cosR(vecs(q), vecs(c)))
     }
     assert(sim.ensureIvfpqIndex(spark, dir, indexDir))
     val after = key(sim.annIvfPqServeFrom(spark, dir, indexDir))
-    assert(sim.residentIvfpqLoads === loads0 + 2)
+    assert(sim.residentIvfpq.builds === loads0 + 2)
     assert(after === key(sim.annIvfPq(spark, dir)))
     assert(after !== before)
   }

@@ -49,7 +49,7 @@ class LibraryLintSpec extends AnyFunSuite {
     val bad = outside(Set("SessionMemo.scala"),
       hits("""GraftBridge\.sessionUUID\(""".r))
     assert(bad.isEmpty, "\nsession-keyed state outside SessionMemo (use a " +
-      "SessionMemo, or SessionMemo.session for the key):\n  " +
+      "SessionMemo):\n  " +
       bad.mkString("\n  "))
   }
 

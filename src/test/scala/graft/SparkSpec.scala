@@ -11,15 +11,11 @@ object TestSpark {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // MICROS-no-UTC feed reads as LTZ at the scan itself (UTC session:
-      // bit-identical micros) so ts range predicates reach PushedFilters
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       // PlanSpec greps PushedFilters out of scan-node metadata; the
       // default 100-char truncation cuts mid-filter-list (LTZ literals
       // render longer than NTZ ones did) and fails asserts spuriously
       .config("spark.sql.maxMetadataStringLength", "2000")
+      .config(EngineDefaults.read)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1021,4 +1021,16 @@ class StreamingSpec extends SparkSpec {
     assert(SessionMemo.entriesFor(spark) === before + 1,
       "superseded stamp entries accumulated in the session cache")
   }
+
+  test("a stream replay leaves no memory-sink view behind: q76 twice gives " +
+      "the same rows and no graft_stream_* view") {
+    val q76 = SparkEntry.queries("q76_stream_tumbling")
+    def rows() = q76(spark, sf).collect().map(_.toSeq).toSet
+    val first = rows()
+    assert(first.nonEmpty)
+    assert(rows() === first)
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_"))
+    assert(views.isEmpty, s"memory-sink views left: ${views.mkString(", ")}")
+  }
 }
